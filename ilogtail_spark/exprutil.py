@@ -42,7 +42,10 @@ def pin(col: Column) -> Column:
         F.col) — embedding the pinned tree into every consumer copies a
         nondeterministic tree per site, which also defeats runtime
         subexpression elimination.
-    `element_at(array(col), int(rand()*0)+1)` survives optimization,
-    codegens, and always evaluates to `col` (index is always 1).
+    `element_at(array(col), int(rand(0)*0)+1)` survives optimization,
+    codegens, and always evaluates to `col` (index is always 1). The seed
+    is fixed because it is a literal in the generated Java: an unseeded
+    `rand()` draws a new one per call, so every rebuilt plan would miss
+    the codegen cache and compile again.
     """
-    return F.element_at(F.array(col), (F.rand() * 0).cast("int") + 1)
+    return F.element_at(F.array(col), (F.rand(0) * 0).cast("int") + 1)

@@ -21,7 +21,7 @@ group indices 1..n); un-aliased references, library parens, and literal
 parens the user wrote are all rewritten non-capturing — exactly the set
 the reference's extraction loop would skip. The compiled artifact is ONE
 plain-group regex plus an ordered (alias, type, group_index) list that
-runs unchanged in JVM ``regexp_extract`` or pandas ``str.extract``.
+runs unchanged in the JVM regex kernel of ``regex_parse``.
 
 Multiple `Match` expressions are tried in order, first match wins
 (processor_grok.go:135-173) — see :func:`grok_parse`.
@@ -653,7 +653,6 @@ def grok_parse(
     custom_patterns: dict[str, str] | None = None,
     keep_source: bool = True,
     keep_source_if_parse_error: bool = True,
-    mode: str = "jvm",
     max_input_len: int | None = None,
 ) -> DataFrame:
     """processor_grok (plugins/processor/grok/processor_grok.go:35-173).
@@ -682,7 +681,7 @@ def grok_parse(
         return regex_parse(
             df, cg.regex, cg.keys, source_key, types=cg.types,
             keep_source=keep_source,
-            keep_source_if_parse_error=keep_source_if_parse_error, mode=mode,
+            keep_source_if_parse_error=keep_source_if_parse_error,
             max_input_len=max_input_len,
         )
 

@@ -183,29 +183,6 @@ def add_lineage(
     )
 
 
-def observe_stage(df: DataFrame, stage: str):
-    """Per-stage row counters that ride an existing action — mirrors the
-    pipeline's mProcessorsInEventsTotal / OutEventsTotal metric pairs
-    (core/pipeline/Pipeline.h:110-117) WITHOUT re-scanning the data
-    (a metrics-only `df.count()` is a full extra pass at 100 TB).
-
-    Returns ``(df_observed, observation)``; read
-    ``observation.get["rows"]`` after any action has executed the plan.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(f"stage:{stage}")
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
-
-
-def stage_metrics_row(spark, stage: str, rows_in: int, rows_out: int) -> DataFrame:
-    """1-row metrics DataFrame for the checkpoint/metrics table, fed from
-    `observe_stage` results (never from counting the data again)."""
-    return spark.createDataFrame(
-        [(stage, rows_in, rows_out)], "stage string, rows_in long, rows_out long"
-    )
-
-
 def rate_anomalies(
     df: DataFrame,
     key_cols: list[str],

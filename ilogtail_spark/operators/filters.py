@@ -71,13 +71,6 @@ def filter_expr(df: DataFrame, tree: dict) -> DataFrame:
     return df.filter(compile_filter_tree(tree))
 
 
-def discard_non_utf8(df: DataFrame, key: str) -> DataFrame:
-    """ProcessorFilterNative DiscardingNonUTF8 flag
-    (core/plugin/processor/ProcessorFilterNative.h:133). Parquet strings
-    are valid UTF-8 by construction, so this is a null guard in Spark."""
-    return df.filter(F.col(key).isNotNull())
-
-
 def filter_key_regex_map(
     df: DataFrame,
     map_col: str,

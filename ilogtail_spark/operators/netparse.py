@@ -194,7 +194,7 @@ def syslog_parse(
             else (_RFC3164_RE, _RFC3164_KEYS)
         )
         p = regex_parse(p, re3, keys3, source_key, keep_source=True,
-                        dotall=False, guard_startswith="<")
+                        dotall=False)
         mon_num = F.element_at(
             F.create_map(*[F.lit(x) for kv in _MONTHS.items() for x in kv]),
             F.col("mon3"),
@@ -228,7 +228,7 @@ def syslog_parse(
 
     if want5:
         p = regex_parse(p, _RFC5424_RE, _RFC5424_KEYS, source_key,
-                        keep_source=True, dotall=False, guard_startswith="<")
+                        keep_source=True, dotall=False)
         ok5 = F.col("pri5").isNotNull() & (F.col("pri5").try_cast("int") <= 191)
         nil5 = lambda c: F.when(F.col(c) != "-", F.col(c))  # noqa: E731
         ts5 = nil5("ts5").try_cast("timestamp")

@@ -12,16 +12,18 @@ transforms (SURVEY.md §2.2). The contract shared by all of them:
     columnar analog, and it lets Parquet/Tungsten drop the heaviest
     column before any shuffle).
 
-Everything is built-in Column expressions (whole-stage codegen) except
-the optional Arrow path for the regex parser, which does a single-pass
-vectorized ``Series.str.extract`` — useful when the per-key
-``regexp_extract`` re-execution cost exceeds the Arrow transfer cost
-(measured in bench.py, §7.3.6 of SURVEY.md).
+Everything is built-in Column expressions (whole-stage codegen). Every
+single-pattern regex parse — regex, grok, dissect, syslog, statsd/influx
+and SPL ``parse-regexp`` — runs through the one kernel of :func:`regex_parse`,
+which executes the regex once per row behind a literal guard derived from
+the pattern itself.
 """
 
 from __future__ import annotations
 
 import re
+from re import _constants as _sre
+from re import _parser as _sre_parse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -47,9 +49,10 @@ def _apply_keep_source(
 
 # one-pass sentinel encoding: the matched groups are packed into a single
 # \x01-delimited string prefixed with \x02, so the (expensive) regex runs
-# exactly once per row instead of once per key. Values containing \x01/\x02
-# would corrupt the packing — vanishingly unlikely in log text, and the
-# per-key mode ('jvm_perkey') is available when it matters.
+# exactly once per row instead of once per key. A source holding \x01 or
+# \x02 could corrupt the packing, so such a row is marked with a bare \x01
+# (a clean row's packed value never equals it) and takes per-key
+# ``regexp_extract`` instead.
 _ONEPASS_SEP = "\x01"
 _ONEPASS_SENT = "\x02"
 
@@ -65,35 +68,22 @@ def regex_parse(
     keep_source_if_parse_error: bool = True,
     full_match: bool = False,
     dotall: bool = True,
-    mode: str = "jvm",
-    guard_startswith: str | None = None,
-    guard_regex: str | None = None,
     max_input_len: int | None = None,
 ) -> DataFrame:
     """processor_regex (plugins/processor/regex/regex.go:32-129) /
     ProcessorParseRegexNative (core/plugin/processor/ProcessorParseRegexNative.cpp:103).
-
-    `guard_startswith` / `guard_regex` give a CHEAP NECESSARY condition
-    for the pattern (e.g. nginx lines start with a digit): rows failing
-    the guard skip the expensive regex entirely and are treated as parse
-    failures. Sound only if every true match satisfies the guard —
-    measured 2.1× end-to-end on a mixed-format corpus where ~20% of rows
-    are the target format (tools/bench_prefilter.py).
 
     `keys[i]` receives capture group i+1. The reference prepends ``(?s)``
     so ``.`` crosses newlines (regex.go:56-57); `full_match` anchors the
     whole value (regex.go:107). Fewer matched groups than keys = parse
     fail (regex.go:115-120) — here expressed as: no match ⇒ all keys NULL.
 
-    mode='jvm'        : ONE regex execution per row via a sentinel
-                        ``regexp_replace`` + ``split`` — whole-stage
-                        codegen, zero Python. 2.8× faster than per-key
-                        extraction on the 9-key nginx pattern (bench).
-    mode='jvm_perkey' : per-key ``regexp_extract`` (N+1 executions) — the
-                        fallback when field values may contain \\x01/\\x02.
-    mode='arrow'      : one vectorized pandas ``str.extract`` pass —
-                        single execution, Arrow transfer; for patterns
-                        needing Python-only regex features.
+    The regex runs ONCE per row: a sentinel ``regexp_replace`` packs the
+    groups and ``split`` unpacks them — whole-stage codegen, zero Python,
+    2.8× faster than per-key extraction on the 9-key nginx pattern. Rows
+    that cannot match skip the regex: :func:`literal_guard` derives a
+    ``startswith``/``contains`` test from the literals every match must
+    hold (the literal prefilter of RE2 and Hyperscan).
 
     `max_input_len` TRUNCATES the matched input to its first N chars —
     the runtime stand-in for the reference's regexp2 MatchTimeout
@@ -116,48 +106,51 @@ def regex_parse(
         else F.col(source_key)
     )
 
-    guard: Column | None = None
-    if guard_startswith is not None:
-        guard = src.startswith(guard_startswith)
-    if guard_regex is not None:
-        g = src.rlike(guard_regex)
-        guard = g if guard is None else (guard & g)
-
-    if mode == "jvm":
-        return _regex_parse_onepass(
-            df, pat, keys, source_key, types,
-            keep_source, keep_source_if_parse_error, full_match, guard,
-            src=src,
-        )
-
-    if mode == "arrow":
-        df = _regex_parse_arrow(df, pat, keys, source_key, src=src)
-        matched = F.col("__m__")
-        for k in keys:
-            c = F.col(k)
-            if k in types:
-                c = c.cast(types[k])
-            df = df.withColumn(k, c)
-        df = _apply_keep_source(df, source_key, matched, keep_source, keep_source_if_parse_error)
-        return df.drop("__m__")
-
-    matched = src.rlike(pat)
+    # The lazy ``^.*?`` wrapper reproduces search (find) semantics when
+    # the caller didn't ask for a full match; a non-matching value passes
+    # through unchanged (no sentinel ⇒ parse fail).
+    flags, body = ("(?s)", pat[4:]) if pat.startswith("(?s)") else ("", pat)
+    wrapped = pat if full_match else f"{flags}^(?:.*?)(?:{body})(?:.*)$"
+    repl = _ONEPASS_SENT + _ONEPASS_SEP.join(f"${i}" for i in range(1, len(keys) + 1))
+    packed = F.when(
+        src.contains(_ONEPASS_SEP) | src.contains(_ONEPASS_SENT), F.lit(_ONEPASS_SEP)
+    ).otherwise(F.regexp_replace(src, wrapped, repl))
+    guard = literal_guard(pat, src)
     if guard is not None:
-        matched = guard & matched
+        packed = F.when(guard, packed)
+    # pin the single regex execution as a NAMED column: the N key
+    # columns, the matched flag, and any downstream filter on a parsed
+    # key all reference it, and unpinned, Catalyst inlines the regex
+    # (and whatever expression synthesized the source) into every site
+    # (see exprutil.pin; spl_pipeline measured 8.9 s → see
+    # OPTIMIZATION_r08.md)
+    from ilogtail_spark.exprutil import pin
+
+    df = df.withColumn("__rxp__", pin(packed))
+    packed_ref = F.col("__rxp__")
+    perkey = packed_ref == _ONEPASS_SEP
+    matched = F.when(perkey, src.rlike(pat)).otherwise(
+        packed_ref.isNotNull() & packed_ref.startswith(_ONEPASS_SENT)
+    )
+    arr = F.split(F.substring(packed_ref, 2, 2147483647), _ONEPASS_SEP)
+
+    def group(i: int) -> Column:
+        return F.when(perkey, F.regexp_extract(src, pat, i + 1)).otherwise(arr.getItem(i))
+
     cols = {}
     for k, idxs in _key_slots(keys).items():
-        raw = F.regexp_extract(src, pat, idxs[0] + 1)
+        raw = group(idxs[0])
         for j in idxs[1:]:
-            raw = F.coalesce(
-                F.nullif(raw, F.lit("")),
-                F.regexp_extract(src, pat, j + 1),
-            )
+            raw = F.coalesce(F.nullif(raw, F.lit("")), group(j))
         c = F.when(matched, raw)
         if k in types:
             c = c.cast(types[k])
         cols[k] = c
+    # matched must be evaluated against the ORIGINAL column before
+    # keep-source nulls it; withColumns computes from the same input row.
     df = df.withColumns(cols)
-    return _apply_keep_source(df, source_key, matched, keep_source, keep_source_if_parse_error)
+    df = _apply_keep_source(df, source_key, matched, keep_source, keep_source_if_parse_error)
+    return df.drop("__rxp__")
 
 
 def _key_slots(keys: list[str]) -> dict[str, list[int]]:
@@ -180,99 +173,102 @@ def _anchor(pat: str) -> str:
     return f"{flags}^(?:{pat})$"
 
 
-def _regex_parse_onepass(
-    df: DataFrame,
-    pat: str,
-    keys: list[str],
-    source_key: str,
-    types: dict[str, str],
-    keep_source: bool,
-    keep_source_if_parse_error: bool,
-    already_anchored: bool,
-    guard: Column | None = None,
-    src: Column | None = None,
-) -> DataFrame:
-    """Single-execution JVM path: one ``regexp_replace`` rewrites a matched
-    value into sentinel + \\x01-joined groups; non-matching values pass
-    through unchanged (no sentinel ⇒ parse fail). The lazy ``^.*?``
-    wrapper reproduces search (find) semantics when the caller didn't ask
-    for a full match."""
-    flags, body = ("(?s)", pat[4:]) if pat.startswith("(?s)") else ("", pat)
-    if already_anchored:
-        wrapped = pat
-    else:
-        wrapped = f"{flags}^(?:.*?)(?:{body})(?:.*)$"
-    repl = _ONEPASS_SENT + _ONEPASS_SEP.join(f"${i}" for i in range(1, len(keys) + 1))
-    packed = F.regexp_replace(
-        src if src is not None else F.col(source_key), wrapped, repl
-    )
-    if guard is not None:
-        packed = F.when(guard, packed)
-    # pin the single regex execution as a NAMED column: the N key
-    # columns, the matched flag, and any downstream filter on a parsed
-    # key all reference it, and unpinned, Catalyst inlines the regex
-    # (and whatever expression synthesized the source) into every site
-    # (see exprutil.pin; spl_pipeline measured 8.9 s → see
-    # OPTIMIZATION_r08.md)
-    from ilogtail_spark.exprutil import pin
+# ---------------------------------------------------------------------------
+# literal guards
+# ---------------------------------------------------------------------------
 
-    df = df.withColumn("__rxp__", pin(packed))
-    packed_ref = F.col("__rxp__")
-    matched = packed_ref.isNotNull() & packed_ref.startswith(_ONEPASS_SENT)
-    arr = F.split(F.substring(packed_ref, 2, 2147483647), _ONEPASS_SEP)
-    cols = {}
-    for k, idxs in _key_slots(keys).items():
-        raw = arr.getItem(idxs[0])
-        for j in idxs[1:]:
-            raw = F.coalesce(F.nullif(raw, F.lit("")), arr.getItem(j))
-        c = F.when(matched, raw)
-        if k in types:
-            c = c.cast(types[k])
-        cols[k] = c
-    # matched must be evaluated against the ORIGINAL column before
-    # keep-source nulls it; withColumns computes from the same input row.
-    df = df.withColumns(cols)
-    df = _apply_keep_source(df, source_key, matched, keep_source, keep_source_if_parse_error)
-    return df.drop("__rxp__")
+_ANCHOR, _BREAK = object(), object()
+_REPEATS = (_sre.MAX_REPEAT, _sre.MIN_REPEAT, _sre.POSSESSIVE_REPEAT)
 
 
-def _regex_parse_arrow(
-    df: DataFrame, pat: str, keys: list[str], source_key: str,
-    src: Column | None = None,
-) -> DataFrame:
-    """Single-pass vectorized extraction via Arrow batches.
+def _java_reads_alike(pattern: str) -> bool:
+    """False when Java's regex engine may read `pattern` differently from
+    Python's parser: ``\\v`` (a vertical-whitespace class in Java, one
+    character in Python), digit escapes (octal and back-reference rules
+    differ), and nested or intersected classes (``[a[b]]``, ``&&``, where
+    Python sees literals). Escapes Python rejects (``\\h``, ``\\R``,
+    ``\\Q``, ``\\p{..}``) fail its parse instead."""
+    in_class = False
+    i, n = 0, len(pattern)
+    while i < n:
+        c = pattern[i]
+        if c == "\\":
+            if pattern[i + 1 : i + 2] in ("v", *"0123456789"):
+                return False
+            i += 2
+            continue
+        if in_class:
+            if c == "[" or pattern.startswith("&&", i):
+                return False
+            in_class = c != "]"
+        elif c == "[":
+            in_class = True
+            # a leading ^ negates and a leading ] is a literal, in both
+            i += 1 + pattern.startswith("^", i + 1)
+            i += pattern.startswith("]", i)
+            continue
+        i += 1
+    return True
 
-    The Spark analog of the reference's one-compile-many-exec regex loop
-    (ProcessorParseRegexNative.cpp:127) — pattern compiled once per
-    executor, rows move as Arrow record batches (no per-row Python).
-    """
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
 
-    n = len(keys)
-    fields = [T.StructField(k, T.StringType()) for k in keys]
-    fields.append(T.StructField("__m__", T.BooleanType()))
-    out_type = T.StructType(fields)
-    # Python `re` numbering matches Java for plain groups; convert the
-    # inline (?s) flag which pandas handles via flags in the pattern.
-    py_pat = re.compile(pat)
-    if py_pat.groups < n:
-        raise ValueError(f"pattern has {py_pat.groups} groups, need {n}")
+def _flatten(items, multiline: bool, out: list) -> None:
+    """Lay a parsed pattern out as the characters a match must consume in
+    order, with _ANCHOR for start-of-input and _BREAK for anything else.
+    Only plain groups and exactly-once repeats are entered; alternation,
+    optional or variable repeats, classes and scoped flags break a run."""
+    for op, av in items:
+        if op is _sre.LITERAL:
+            out.append(chr(av))
+        elif op is _sre.AT and (
+            av is _sre.AT_BEGINNING_STRING or (av is _sre.AT_BEGINNING and not multiline)
+        ):
+            out.append(_ANCHOR)
+        elif op is _sre.SUBPATTERN and not av[1] and not av[2]:
+            _flatten(av[3], multiline, out)
+        elif op in _REPEATS and av[0] == av[1] == 1:
+            _flatten(av[2], multiline, out)
+        else:
+            out.append(_BREAK)
 
-    @pandas_udf(out_type)
-    def _extract(s):  # type: ignore[no-untyped-def]
-        ext = s.str.extract(py_pat, expand=True)
-        out = ext.iloc[:, :n].copy()
-        out.columns = keys
-        out["__m__"] = ext.iloc[:, 0].notna() | s.str.match(py_pat).fillna(False)
-        # str.extract gives NaN for unmatched; normalize to None
-        return out.where(out.notna(), None)
 
-    struct_col = _extract(src if src is not None else F.col(source_key))
-    df = df.withColumn("__ext__", struct_col)
-    for k in keys:
-        df = df.withColumn(k, F.col(f"__ext__.{k}"))
-    return df.withColumn("__m__", F.col("__ext__.__m__")).drop("__ext__")
+def required_literals(pattern: str) -> tuple[str, str]:
+    """(prefix, infix): literal text that every match of `pattern` must
+    start the input with, and the longest literal run it must contain
+    (``''`` where none is implied by the other or can be shown).
+
+    Both are ``''`` when Python cannot parse the pattern, when it sets
+    ``(?i)`` or ``(?x)``, or when Java may read it differently
+    (:func:`_java_reads_alike`)."""
+    if not _java_reads_alike(pattern):
+        return "", ""
+    try:
+        parsed = _sre_parse.parse(pattern)
+    except re.error:
+        return "", ""
+    flags = parsed.state.flags
+    if flags & (re.IGNORECASE | re.VERBOSE):
+        return "", ""
+    tokens: list = []
+    _flatten(parsed, bool(flags & re.MULTILINE), tokens)
+    runs = [""]
+    for t in tokens:
+        if isinstance(t, str):
+            runs[-1] += t
+        else:
+            runs.append("")
+    prefix = runs[1] if tokens and tokens[0] is _ANCHOR else ""
+    infix = max(runs, key=len)
+    return prefix, "" if infix == prefix else infix
+
+
+def literal_guard(pattern: str, src: Column) -> Column | None:
+    """A cheap condition that holds on every `src` value `pattern` finds
+    a match in, or None when no literal is required."""
+    prefix, infix = required_literals(pattern)
+    guard = src.startswith(prefix) if prefix else None
+    if infix:
+        guard = src.contains(infix) if guard is None else guard & src.contains(infix)
+    return guard
 
 
 def json_parse(
@@ -601,21 +597,20 @@ def dissect_parse(
     types: dict[str, str] | None = None,
     keep_source: bool = False,
     keep_source_if_parse_error: bool = True,
-    mode: str = "jvm",
     max_input_len: int | None = None,
 ) -> DataFrame:
     """Dissect-style named-capture parse as one JVM regex pass.
 
     Compiles the dissect pattern with :func:`compile_dissect` and runs it
-    through the same single-pass sentinel engine as :func:`regex_parse`
-    (one regex execution per row, whole-stage codegen). Fields assemble
+    through :func:`regex_parse` (one regex execution per row, whole-stage
+    codegen, behind the guard derived from the delimiters). Fields assemble
     afterwards as zero-cost projections: appends concat their groups with
     `append_separator`, ``%{*k}``/``%{&k}`` pairs become a map column.
 
     The reference has no dissect processor — its users reach for
     processor_regex with hand-written groups (plugins/processor/regex/
     regex.go:32) — but the dissect surface compiles INTO that engine, so
-    it inherits its scale behavior (guards, truncation, Arrow fallback).
+    it inherits its scale behavior (derived guard, truncation).
     """
     regex, plan = compile_dissect(pattern)
     types = types or {}
@@ -628,7 +623,6 @@ def dissect_parse(
         keep_source=keep_source,
         keep_source_if_parse_error=keep_source_if_parse_error,
         dotall=True,
-        mode=mode,
         max_input_len=max_input_len,
     )
     out_cols: dict[str, Column] = {}

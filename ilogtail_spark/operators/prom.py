@@ -106,7 +106,7 @@ def prom_parse(
     """
     src = F.col(source_key)
     # ONE regex execution per line (the sentinel trick of
-    # operators/parse.py mode='jvm'): the anchored grammar rewrites the
+    # operators/parse.py's regex_parse): the anchored grammar rewrites the
     # whole line into \x02 + \x01-joined groups; a non-matching line
     # passes through unchanged (no sentinel ⇒ parse fail). The label
     # blob — the only group that may itself contain \x01 — is packed

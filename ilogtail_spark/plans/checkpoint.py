@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # commit_seq: parquet collect order follows FILE LISTING, not append
 # time — with one parquet file per commit, "the last row" is otherwise
@@ -39,15 +39,20 @@ class CheckpointTable:
         self.spark = spark
         self.path = path
 
-    def _read(self):
-        try:
-            return self.spark.read.schema(_SCHEMA).parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], _SCHEMA)
+    def _read(self) -> DataFrame | None:
+        """The table, or None when nothing was ever committed to it. The
+        existence test asks the Hadoop FileSystem (no Spark job), and every
+        other failure — a bad scheme, an unreadable table — raises: read
+        as "never committed", it would let a run overwrite committed sinks."""
+        sc = self.spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(self.path)
+        if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+            return None
+        return self.spark.read.schema(_SCHEMA).parquet(self.path)
 
     def is_committed(self, run_id: str, stage: str) -> bool:
         df = self._read()
-        return (
+        return df is not None and (
             df.filter(
                 (df.run_id == run_id) & (df.stage == stage) & df.committed
             ).limit(1).count()
@@ -61,6 +66,8 @@ class CheckpointTable:
 
     def payload(self, run_id: str, stage: str) -> dict | None:
         df = self._read()
+        if df is None:
+            return None
         rows = (
             df.filter((df.run_id == run_id) & (df.stage == stage) & df.committed)
             .orderBy(df.commit_seq.asc_nulls_first())

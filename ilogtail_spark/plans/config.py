@@ -893,8 +893,7 @@ def run_ilogtail_config_stream(
     *,
     df: DataFrame | None = None,
     out_dir: str,
-    available_now: bool = True,
-    timeout_sec: int = 120,
+    timeout_sec: float = 120,
 ) -> None:
     """Streaming end-to-end for the SAME YAML file the batch runner
     takes — the reference agent is a continuously-running process, so a
@@ -908,7 +907,11 @@ def run_ilogtail_config_stream(
 
     Order-dependent processors (multiline merge) raise here: on a
     stream they need the cross-batch stateful operator
-    (streaming/stateful.py::stream_merge_multiline), not a window."""
+    (streaming/stateful.py::stream_merge_multiline), not a window.
+
+    Drains the input available at start (AvailableNow) and returns; a
+    drain still running after `timeout_sec` is stopped and raises
+    TimeoutError."""
     from pyspark.sql import functions as F
 
     from ilogtail_spark.operators.route import route_copy
@@ -962,10 +965,9 @@ def run_ilogtail_config_stream(
         out.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", f"{out_dir}/_stream_ckpt")
         .outputMode("append")
+        .trigger(availableNow=True)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     q = writer.start()
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
+    if not q.awaitTermination(timeout_sec):
         q.stop()
+        raise TimeoutError(f"stream did not drain within {timeout_sec} s")

@@ -135,7 +135,7 @@ def q_regex_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """processor_regex: 9-key nginx parse, parsed rows only."""
     t = _t(spark, sf_dir)
     p = regex_parse(
-        t, NGINX_PATTERN, NGINX_KEYS, "text", guard_regex=r"^\d",
+        t, NGINX_PATTERN, NGINX_KEYS, "text",
         types={"response_code": "int", "bytes": "long"},
     )
     return p.filter(F.col("ip").isNotNull()).select(
@@ -787,7 +787,7 @@ def q_gotime(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     p = regex_parse(t, _APP_RE, ["ts_str", "pid", "thread", "level", "code"],
-                    "text", keep_source=True, guard_startswith="2024-")
+                    "text", keep_source=True)
     g = gotime_op(p.filter(F.col("ts_str").isNotNull()),
                   "ts_str", "2006-01-02 15:04:05.000", "epoch", "seconds")
     return g.select("conv_id", "turn_idx", "ts_str", "epoch")
@@ -809,7 +809,7 @@ def q_timestamp_native_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir)
     p = regex_parse(t, _APP_RE, ["ts_str", "pid", "thread", "level", "code"],
-                    "text", keep_source=True, guard_startswith="2024-")
+                    "text", keep_source=True)
     out = parse_timestamp_native(
         p.filter(F.col("ts_str").isNotNull()), "ts_str", "%Y-%m-%d %H:%M:%S.%L",
         dest="event_ts", history_threshold_ts="2024-01-01 00:00:30",
@@ -861,8 +861,7 @@ def q_drop_last_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ilogtail_spark.operators.filters import drop_last_key
 
     t = _t(spark, sf_dir)
-    p = regex_parse(t, NGINX_PATTERN, NGINX_KEYS, "text", keep_source=True,
-                    guard_regex=r"^\d")
+    p = regex_parse(t, NGINX_PATTERN, NGINX_KEYS, "text", keep_source=True)
     out = drop_last_key(p, "text", ["ip", "method", "request"])
     return out.select("conv_id", "turn_idx", "text", "ip")
 
@@ -901,8 +900,8 @@ def q_geoip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ilogtail_spark.operators.enrich import geoip_range_join
 
     t = _t(spark, sf_dir)
-    p = regex_parse(t, NGINX_PATTERN, NGINX_KEYS, "text", keep_source=True,
-                    guard_regex=r"^\d").filter(F.col("ip").isNotNull())
+    p = regex_parse(t, NGINX_PATTERN, NGINX_KEYS, "text",
+                    keep_source=True).filter(F.col("ip").isNotNull())
     # 192.168.0.0 = 3232235520; split the /16 at .128.0
     ranges = spark.createDataFrame(
         [(3232235520, 3232268288, "zone-a"), (3232268288, 3232301056, "zone-b")],
@@ -1205,7 +1204,6 @@ def q_route_exclusive(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-sink counts (verify.LogCount)."""
     t = _t(spark, sf_dir)
     p = regex_parse(t, NGINX_PATTERN, NGINX_KEYS, "text", keep_source=True,
-                    guard_regex=r"^\d",
                     types={"response_code": "int", "bytes": "long"})
     r = route_exclusive(p, _ROUTE_RULES)
     return sink_counts(r)
@@ -1474,7 +1472,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — the reference's per-sink delivered-count check)."""
     t = _t(spark, sf_dir)
     p = regex_parse(t, NGINX_PATTERN, NGINX_KEYS, "text", keep_source=True,
-                    guard_regex=r"^\d",
                     types={"response_code": "int", "bytes": "long"})
     d = dict_map(p, ROLE_DIM, "role", "role_group",
                  handle_missing=True, missing="Unknown")
@@ -1515,7 +1512,6 @@ def q_container_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir).withColumn("cl", F.expr(_CONTAINERD_WRAP_SQL))
     p = container_log_parse(t, "cl", fmt="containerd_text", keep_source=True)
     p2 = regex_parse(p, NGINX_PATTERN, NGINX_KEYS, "content", keep_source=True,
-                     guard_regex=r"^\d",
                      types={"response_code": "int", "bytes": "long"})
     d = dict_map(p2, ROLE_DIM, "role", "role_group",
                  handle_missing=True, missing="Unknown")
@@ -5454,11 +5450,8 @@ def q_prometheus_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ilogtail_spark.operators.convert import prometheus_series
 
     t = _t(spark, sf_dir)
-    # guard: every _APP_RE match starts with a digit — rows failing the
-    # cheap prefilter skip the expensive regex (guide's guard contract)
     p = regex_parse(t, _APP_RE, ["ts_str", "pid", "thread", "level", "code"],
-                    "text", keep_source=True, dotall=False,
-                    guard_regex=r"^\d")
+                    "text", keep_source=True, dotall=False)
     p = p.filter(F.col("level").isNotNull())
     # log_to_metric + prometheus_series reference the parsed columns
     # many times; without the barrier the text-gen + parse chain is

@@ -90,12 +90,15 @@ def run_stream_pipeline(
     out_dir: str,
     spec: dict[str, Any],
     *,
-    available_now: bool = True,
-    timeout_sec: int = 120,
+    timeout_sec: float = 120,
 ) -> None:
     """Stream → build_pipeline (same spec as batch) → foreachBatch routed
     write. foreachBatch is the reference's FlusherV1.Flush extension point
     (pkg/pipeline/flusher.go:60-66) — per micro-batch, write each sink.
+
+    Drains the input available at start (AvailableNow) and returns; a
+    drain still running after `timeout_sec` is stopped and raises
+    TimeoutError.
     """
     from ilogtail_spark.plans.pipeline import build_pipeline
 
@@ -122,10 +125,9 @@ def run_stream_pipeline(
         src.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", f"{out_dir}/_stream_ckpt")
         .outputMode("append")
+        .trigger(availableNow=True)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     q = writer.start()
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
+    if not q.awaitTermination(timeout_sec):
         q.stop()
+        raise TimeoutError(f"stream did not drain within {timeout_sec} s")

@@ -25,6 +25,11 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def sf_dir():
+    return SF_DIR
+
+
+@pytest.fixture(scope="session")
 def transcripts(spark):
     from ilogtail_spark.sources.transcripts import transcripts_df
 

@@ -627,6 +627,15 @@ class TestStreamingConfig:
         with pytest.raises(ValueError, match="stream_merge_multiline"):
             run_ilogtail_config_stream(spark, cfg, out_dir=str(tmp_path / "o"))
 
+    def test_drain_past_timeout_raises(self, spark, tmp_path):
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        (tmp_path / "a.log").write_text("ERROR 1\n")
+        cfg = dict(self.CFG, inputs=[{"Type": "input_file", "FilePaths": [str(tmp_path)]}])
+        with pytest.raises(TimeoutError):
+            run_ilogtail_config_stream(spark, cfg, out_dir=str(tmp_path / "o"),
+                                       timeout_sec=0.001)
+
 
 class TestSplProcessor:
     def test_spl_script_through_yaml(self, spark):

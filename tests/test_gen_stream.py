@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from ilogtail_spark.gen import HOT_EVERY, gen_transcripts
@@ -94,8 +95,7 @@ class TestStreaming:
         # several files so availableNow processes multiple micro-batches
         t.repartition(6).write.parquet(STREAM_DIR)
 
-        run_stream_pipeline(spark, STREAM_DIR, STREAM_OUT, FLAGSHIP_SPEC,
-                            available_now=True)
+        run_stream_pipeline(spark, STREAM_DIR, STREAM_OUT, FLAGSHIP_SPEC)
 
         got = (
             spark.read.parquet(f"{STREAM_OUT}/routed")
@@ -122,11 +122,11 @@ class TestStreaming:
         first, second = t.filter("turn_idx % 2 = 0"), t.filter("turn_idx % 2 = 1")
         first.coalesce(2).write.parquet(in_dir)
 
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC, available_now=True)
+        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
         n1 = spark.read.parquet(f"{out_dir}/routed").count()
 
         second.coalesce(2).write.mode("append").parquet(in_dir)  # new files arrive
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC, available_now=True)
+        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
         n2 = spark.read.parquet(f"{out_dir}/routed").count()
 
         total = build_pipeline(spark.read.parquet(in_dir), FLAGSHIP_SPEC).count()
@@ -144,11 +144,17 @@ class TestStreaming:
         t = gen_transcripts(spark, 30)
         t.repartition(4).write.parquet(in_dir)
 
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC, available_now=True)
+        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
         n1 = spark.read.parquet(f"{out_dir}/routed").count()
         # simulate a replay after checkpoint loss — the worst case for an
         # append sink (every batch re-delivered)
         shutil.rmtree(f"{out_dir}/_stream_ckpt")
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC, available_now=True)
+        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
         n2 = spark.read.parquet(f"{out_dir}/routed").count()
         assert n1 == n2 > 0
+
+    def test_drain_past_timeout_raises(self, spark, tmp_path):
+        gen_transcripts(spark, 10).write.parquet(str(tmp_path / "in"))
+        with pytest.raises(TimeoutError):
+            run_stream_pipeline(spark, str(tmp_path / "in"), str(tmp_path / "out"),
+                                FLAGSHIP_SPEC, timeout_sec=0.001)

@@ -16,9 +16,13 @@ from ilogtail_spark.operators.parse import (
     json_parse,
     kv_parse,
     regex_parse,
+    required_literals,
     split_char,
     split_log_string,
 )
+from ilogtail_spark.operators.netparse import _RFC5424_RE
+from ilogtail_spark.plans.pipeline import NGINX_KEYS, NGINX_PATTERN
+from ilogtail_spark.queries import _APP_RE
 
 APSARA_LINE = "2021-08-27 13:04:14.920 77711773 [ThreadName] INFO  content detail"
 APSARA_RE = r"(\d+-\d+-\d+ \d+:\d+:\d+\.\d+) (\d+) \[(\S+)\] (\w+)\s+(.*)"
@@ -73,31 +77,85 @@ class TestRegexParse:
         out = regex_parse(df, r"code=(\d+)", ["code"], types={"code": "int"}).first()
         assert out["code"] == 42
 
-    def test_arrow_mode_matches_jvm(self, spark):
-        rows = [(APSARA_LINE,), ("garbage",), (None,)]
-        df = _df(spark, rows)
-        jvm = regex_parse(df, APSARA_RE, APSARA_KEYS, mode="jvm")
-        arrow = regex_parse(df, APSARA_RE, APSARA_KEYS, mode="arrow")
-        key = lambda r: tuple(str(r[k]) for k in APSARA_KEYS + ["text"])  # noqa: E731
-        assert sorted(map(key, jvm.collect())) == sorted(map(key, arrow.collect()))
+    def test_nginx_parse_matches_duckdb(self, spark, sf_dir):
+        # the kernel over the 5-format corpus against DuckDB's
+        # regexp_extract, as O_REGEX_PARSE checks the registry query —
+        # here every row and all nine keys, unmatched rows NULL
+        import duckdb
 
-    def test_all_three_modes_agree_on_mixed_corpus(self, spark):
-        # the physical mode is a pure execution detail — all three must
-        # produce identical rows over the full 5-format transcript corpus
-        from ilogtail_spark.plans.pipeline import NGINX_KEYS, NGINX_PATTERN
+        from ilogtail_spark.queries import _CTE
         from ilogtail_spark.sources.transcripts import transcripts_df
 
-        t = transcripts_df(spark, "/root/testdata/sf0.001")
-        outs = []
-        for mode in ("jvm", "jvm_perkey", "arrow"):
-            p = regex_parse(t, NGINX_PATTERN, NGINX_KEYS, "text",
-                            keep_source=True, mode=mode,
-                            types={"response_code": "int", "bytes": "long"})
-            outs.append(sorted(
-                tuple(str(r[k]) for k in ["conv_id", "turn_idx", *NGINX_KEYS])
-                for r in p.collect()
-            ))
-        assert outs[0] == outs[1] == outs[2]
+        cols = ["conv_id", "turn_idx", *NGINX_KEYS]
+        p = regex_parse(transcripts_df(spark, sf_dir), NGINX_PATTERN, NGINX_KEYS,
+                        "text", keep_source=True)
+        got = sorted(tuple(r) for r in p.select(*cols).collect())
+        con = duckdb.connect()
+        con.sql(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+        groups = ", ".join(
+            f"CASE WHEN m THEN regexp_extract(text, '{NGINX_PATTERN}', {i}) END"
+            for i in range(1, len(NGINX_KEYS) + 1)
+        )
+        want = sorted(con.sql(
+            f"{_CTE}, t AS (SELECT *, regexp_matches(text, '{NGINX_PATTERN}') AS m "
+            f"FROM transcripts) SELECT conv_id, turn_idx, {groups} FROM t"
+        ).fetchall())
+        assert sum(r[2] is not None for r in want) > 0
+        assert got == want
+
+    def test_separator_bytes_in_a_field(self, spark):
+        # \x01/\x02 in the source would corrupt the one-pass packing;
+        # such rows take per-key extraction inside the same expression
+        rows = [("k=a\x01b c=\x02z",), ("k=plain c=y",), ("no match\x01",), (None,)]
+        out = regex_parse(_df(spark, rows), r"k=(\S+) c=(\S+)", ["k", "c"],
+                          keep_source=True).collect()
+        assert {r["text"]: (r["k"], r["c"]) for r in out} == {
+            "k=a\x01b c=\x02z": ("a\x01b", "\x02z"),
+            "k=plain c=y": ("plain", "y"),
+            "no match\x01": (None, None),
+            None: (None, None),
+        }
+
+    def test_rebuilt_plan_compiles_nothing(self, spark):
+        # a plan built again from the same calls must hit Spark's codegen
+        # cache: a per-build literal in the generated Java (pin's rand
+        # seed) would compile every run anew
+        codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        df = spark.range(16).select(
+            F.concat(F.lit("2021-08-27 13:04:14.920 "), F.col("id").cast("string"),
+                     F.lit(" [T] INFO  msg")).alias("text")
+        )
+
+        def run():
+            return regex_parse(df, APSARA_RE, APSARA_KEYS).collect()
+
+        assert all(r["pid"] is not None for r in run())
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        run()
+        assert codegen.METRIC_COMPILATION_TIME().getCount() == before
+
+
+class TestRequiredLiterals:
+    @pytest.mark.parametrize("pattern,expected", [
+        (NGINX_PATTERN, ("", " HTTP/")),
+        (_APP_RE, ("", " request handled code=")),
+        (_RFC5424_RE, ("<", ">1 ")),
+        (r"\Aab(c+)", ("ab", "")),
+        ("(?s)^(?:abc)$", ("abc", "")),
+        ("(?m)^abc", ("", "abc")),  # under (?m), ^ is any line start
+        ("(?:abc|abd)x", ("", "ab")),  # Python factors the shared prefix out
+        (r"xx\\vyy", ("", "xx\\vyy")),  # an escaped backslash, then v
+        (r"(?i:abc)d+", ("", "")),
+    ])
+    def test_derived(self, pattern, expected):
+        assert required_literals(pattern) == expected
+
+    @pytest.mark.parametrize("pattern", [
+        "(?i)abcd", "(?x)ab cd", r"ab\vcd", r"ab\hcd", r"ab\Rcd", r"\Qab\Ecd",
+        "ab[a[b]]cd", "ab[a-z&&[^c]]cd", r"(ab)cd\1", r"ab\0123cd", "ab(cd",
+    ])
+    def test_none_where_java_may_read_otherwise(self, pattern):
+        assert required_literals(pattern) == ("", "")
 
 
 class TestJsonParse:

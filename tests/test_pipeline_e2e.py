@@ -115,6 +115,16 @@ class TestRunAndResume:
         counts3 = run_pipeline(spark, transcripts, FLAGSHIP_SPEC, OUT, run_id="t2")
         assert counts3 == counts
 
+    def test_checkpoint_read_failure_raises(self, spark):
+        from py4j.protocol import Py4JJavaError
+
+        missing = CheckpointTable(spark, f"{OUT}_never_written/_checkpoint")
+        assert not missing.is_committed("t1", "route_write")
+        assert missing.payload("t1", "route_write") is None
+        # a path that cannot be read is not "never committed"
+        with pytest.raises(Py4JJavaError, match="nosuchfs"):
+            CheckpointTable(spark, "nosuchfs:///x/_checkpoint").is_committed("t1", "route_write")
+
 
 class TestTimeparse:
     def test_strptime_format_conversion(self):
