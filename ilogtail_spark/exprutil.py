@@ -11,8 +11,11 @@ plan carried 15 copies of the transcripts text-gen + sentinel regex.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import json
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 
 def pin(col: Column) -> Column:
@@ -49,3 +52,13 @@ def pin(col: Column) -> Column:
     the codegen cache and compile again.
     """
     return F.element_at(F.array(col), (F.rand(0) * 0).cast("int") + 1)
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small one-partition frame built in the JVM: the rows are one JSON
+    literal typed by the DDL `schema`. `createDataFrame(rows)` starts Python
+    workers each time it runs (a one-row parquet write: ~0.4 s wall and
+    ~1.2 CPU-s on 4 vCPU, against ~0.15 s and ~0.3 CPU-s this way)."""
+    st = StructType.fromDDL(schema)
+    data = json.dumps([dict(zip(st.names, r)) for r in rows])
+    return spark.range(0, 1, 1, 1).select(F.inline(F.from_json(F.lit(data), ArrayType(st))))

@@ -17,6 +17,8 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ilogtail_spark.exprutil import literal_frame
+
 
 def dict_map(
     df: DataFrame,
@@ -45,9 +47,8 @@ def dict_map(
         raise ValueError(f"dict size {len(mapping)} > MaxDictSize {max_dict_size}")
 
     if method == "join":
-        spark = df.sparkSession
-        dim = spark.createDataFrame(
-            [(k, v) for k, v in mapping.items()], f"{source_key} string, __dict_val__ string"
+        dim = literal_frame(
+            df.sparkSession, list(mapping.items()), f"`{source_key}` string, __dict_val__ string"
         )
         joined = df.join(F.broadcast(dim), on=source_key, how="left")
         looked_up: Column = F.col("__dict_val__")

@@ -25,6 +25,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ilogtail_spark.exprutil import literal_frame
+
 # commit_seq: parquet collect order follows FILE LISTING, not append
 # time — with one parquet file per commit, "the last row" is otherwise
 # arbitrary. Every commit stamps a monotonic sequence and `payload`
@@ -51,28 +53,17 @@ class CheckpointTable:
         return self.spark.read.schema(_SCHEMA).parquet(self.path)
 
     def is_committed(self, run_id: str, stage: str) -> bool:
-        df = self._read()
-        return df is not None and (
-            df.filter(
-                (df.run_id == run_id) & (df.stage == stage) & df.committed
-            ).limit(1).count()
-            > 0
-        )
+        return self.payload(run_id, stage) is not None
 
     def commit(self, run_id: str, stage: str, payload: dict | None = None) -> None:
-        row = [(run_id, stage, json.dumps(payload or {}, sort_keys=True), True,
-                time.time_ns())]
-        self.spark.createDataFrame(row, _SCHEMA).write.mode("append").parquet(self.path)
+        row = (run_id, stage, json.dumps(payload or {}, sort_keys=True), True, time.time_ns())
+        literal_frame(self.spark, [row], _SCHEMA).write.mode("append").parquet(self.path)
 
     def payload(self, run_id: str, stage: str) -> dict | None:
         df = self._read()
         if df is None:
             return None
-        rows = (
-            df.filter((df.run_id == run_id) & (df.stage == stage) & df.committed)
-            .orderBy(df.commit_seq.asc_nulls_first())
-            .collect()
-        )
-        if not rows:
-            return None
-        return json.loads(rows[-1]["payload"])
+        mine = df.filter((df.run_id == run_id) & (df.stage == stage) & df.committed)
+        rows = mine.select("commit_seq", "payload").collect()
+        # a run's few commits are ordered here: a Spark sort costs two jobs
+        return json.loads(max(rows, key=lambda r: r[0] or -1)[1]) if rows else None

@@ -265,63 +265,55 @@ def run_pipeline(
     shard_count: int = 32,
 ) -> dict[str, int]:
     """Execute: route → (optional shard repartition) → one partitioned
-    multi-sink write → aggregate tables → checkpoint rows.
+    multi-sink write → aggregate tables → one checkpoint commit.
 
-    Returns per-sink row counts. Mirrors the reference lifecycle
-    (SURVEY.md §3.4): the per-sink write is ONE job with
-    `partitionBy(route)` (single pass — no per-sink rescan), sharded
-    pre-write like aggregator_shardhash when `shard_keys` is given.
+    Returns per-sink row counts. Like the reference, which flushes each
+    batch once and keeps its counters in memory (Pipeline.h:110-117), the
+    sinks are ONE `write_routed` job (sharded pre-write when `shard_keys`
+    is given) that carries rows in and per-route counts as Observations;
+    `sink_counts` is written from them, the other aggregators from a
+    schema-given re-read of `routed/`, and the commit payload holds
+    `counts`, `rows_in` and `rows_out`. A committed `run_id` returns its
+    committed counts and writes nothing.
     """
     from pyspark.sql import Observation
 
+    from ilogtail_spark.exprutil import literal_frame
+    from ilogtail_spark.operators.route import write_routed
     from ilogtail_spark.plans.checkpoint import CheckpointTable
-
-    # rows_in rides the write job as an Observation — no second scan of the
-    # input (at 100 TB a metrics-only df.count() is a full extra pass)
-    obs_in = Observation(f"rows_in:{run_id}")
-    df = df.observe(obs_in, F.count(F.lit(1)).alias("n"))
-    routed = build_pipeline(df, spec)
-    if shard_keys:
-        routed = agg_ops.shard_hash(routed, shard_keys, shard_count, repartition=True)
 
     ckpt = CheckpointTable(spark, f"{out_dir}/_checkpoint")
     stage = "route_write"
-    if ckpt.is_committed(run_id, stage):
-        counts_df = spark.read.parquet(f"{out_dir}/sink_counts")
-        return {r["route"]: r["log_count"] for r in counts_df.collect()}
+    done = ckpt.payload(run_id, stage)
+    if done is not None:
+        # older commits carried the bare route → count dict
+        return done["counts"] if isinstance(done.get("counts"), dict) else done
 
-    routed.write.mode("overwrite").partitionBy("route").parquet(f"{out_dir}/routed")
+    obs_in, obs_out = Observation(), Observation()
+    routed = build_pipeline(df.observe(obs_in, F.count(F.lit(1)).alias("n")), spec)
+    if shard_keys:
+        routed = agg_ops.shard_hash(routed, shard_keys, shard_count, repartition=True)
+    # every route apply_router can give a row: the rule sinks, plus the
+    # default unless drop_dismatch (copy mode has none)
+    router = spec.get("router") or {}
+    routes = [s for (_, _, s) in router.get("rules", [])]
+    if router.get("mode") != "copy" and not (routes and router.get("drop_dismatch")):
+        routes.append(router.get("default", "sink_default"))
+    per_route = [F.count_if(F.col("route") == r).alias(r) for r in dict.fromkeys(routes)]
+    write_routed(routed.observe(obs_out, *per_route), f"{out_dir}/routed")
+    counts = {r: n for r, n in obs_out.get.items() if n}
 
-    written = spark.read.parquet(f"{out_dir}/routed")
+    # partitionBy moves route last
+    schema = routed.drop("route").schema.add(routed.schema["route"])
+    written = spark.read.schema(schema).parquet(f"{out_dir}/routed")
     aggs = aggregates_for(written, spec)
+    aggs["sink_counts"] = literal_frame(spark, list(counts.items()), "route string, log_count long")
     for name, adf in aggs.items():
         adf.write.mode("overwrite").parquet(f"{out_dir}/{name}")
 
-    counts = {
-        r["route"]: r["log_count"]
-        for r in spark.read.parquet(f"{out_dir}/sink_counts").collect()
-    }
-
-    # per-stage + per-partition metrics (mirrors mProcessorsInEventsTotal /
-    # OutEventsTotal, core/pipeline/Pipeline.h:110-117, and the per-source
-    # pack bookkeeping of aggregator_context). The write action above
-    # already evaluated the observation — this is a dict lookup, not a job.
-    rows_in = obs_in.get["n"]
-    rows_out = sum(counts.values())
-    spark.createDataFrame(
-        [(run_id, "pipeline", rows_in, rows_out)],
-        "run_id string, stage string, rows_in long, rows_out long",
-    ).write.mode("append").parquet(f"{out_dir}/metrics")
-    if "lineage" in written.columns:
-        written.groupBy("route", F.spark_partition_id().alias("partition_id")).agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.min("lineage").alias("lineage_first"),
-            F.max("lineage").alias("lineage_last"),
-        ).withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
-            f"{out_dir}/partition_metrics"
-        )
-
-    ckpt.commit(run_id, stage, counts)
+    ckpt.commit(run_id, stage, {
+        "counts": counts, "rows_in": obs_in.get["n"], "rows_out": sum(counts.values()),
+    })
     return counts
 
 

@@ -157,6 +157,15 @@ class TestDictMap:
         vals = {r["role"]: r["g"] for r in a.collect()}
         assert vals == {"user": "human", "ghost": "Unknown", None: "Unknown"}
 
+    def test_join_dimension_built_in_jvm(self, spark):
+        """The broadcast dimension is a literal frame, not a Python-fed RDD
+        scan that would start Python workers."""
+        df = spark.range(3).select(F.col("id").cast("string").alias("k"))
+        out = dict_map(df, {"0": "zero", "1": "one"}, "k", "v", method="join")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan and "ExistingRDD" not in plan
+        assert {r["k"]: r["v"] for r in out.collect()} == {"0": "zero", "1": "one", "2": None}
+
     def test_fill_vs_overwrite(self, spark):
         df = spark.createDataFrame(
             [("user", "keepme"), ("tool", None)], "role string, g string"

@@ -4,15 +4,18 @@ LogCount, log_field.go:80 LogFieldKV, log_order.go:31 LogOrder)."""
 
 from __future__ import annotations
 
+import json
+import os
 import re
 import shutil
+import uuid
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from ilogtail_spark.operators.timeparse import gotime_op, strptime_op, strptime_to_java
-from ilogtail_spark.plans.checkpoint import CheckpointTable
+from ilogtail_spark.plans.checkpoint import _SCHEMA, CheckpointTable
 from ilogtail_spark.plans.pipeline import (
     FLAGSHIP_SPEC,
     NGINX_PATTERN,
@@ -124,6 +127,149 @@ class TestRunAndResume:
         # a path that cannot be read is not "never committed"
         with pytest.raises(Py4JJavaError, match="nosuchfs"):
             CheckpointTable(spark, "nosuchfs:///x/_checkpoint").is_committed("t1", "route_write")
+
+
+def _rows(df) -> list:
+    return sorted(map(repr, df.collect()))
+
+
+def _job_ids(spark, fn) -> int:
+    """How many Spark jobs `fn()` launches: the ids handed out in a job
+    group of its own (the status store's total count is capped by
+    spark.ui.retainedJobs, which a long test session exceeds)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_ROUTER_SHAPES = {
+    # sink_never matches no row and must be absent, not 0
+    "exclusive_empty_route": ({"router": {"rules": [
+        ["role", "nobody", "sink_never"], ["role", "tool", "sink_tool"],
+        ["role", "assistant|system", "sink_model"]]}}, None),
+    "drop_dismatch": ({"router": {"rules": [["role", "tool|user", "sink_tu"]],
+                                  "drop_dismatch": True}}, None),
+    # every user row fans out to two sinks
+    "copy": ({"router": {"mode": "copy", "rules": [
+        ["role", "user", "sink_user"], ["role", "user", "sink_audit"],
+        ["role", "tool", "sink_tool"]]}}, None),
+    "no_router": ({}, None),
+    "shard_keys": (FLAGSHIP_SPEC, ["conv_id"]),
+}
+
+
+class TestSinkPath:
+    @pytest.mark.parametrize("shape", sorted(_ROUTER_SHAPES))
+    def test_observed_counts_match_grouping(self, spark, transcripts, shape):
+        spec, shard_keys = _ROUTER_SHAPES[shape]
+        out = f"{OUT}_shape_{shape}"
+        shutil.rmtree(out, ignore_errors=True)
+        counts = run_pipeline(spark, transcripts, spec, out, run_id="s1",
+                              shard_keys=shard_keys, shard_count=8)
+        grouped = {
+            r["route"]: r["count"]
+            for r in spark.read.parquet(f"{out}/routed").groupBy("route").count().collect()
+        }
+        table = {
+            r["route"]: r["log_count"] for r in spark.read.parquet(f"{out}/sink_counts").collect()
+        }
+        assert counts == grouped == table
+        if shape == "exclusive_empty_route":
+            assert "sink_never" not in counts and "sink_default" in counts
+        if shape == "copy":
+            assert counts["sink_user"] == counts["sink_audit"] > 0
+        payload = CheckpointTable(spark, f"{out}/_checkpoint").payload("s1", "route_write")
+        assert payload["counts"] == counts
+        assert payload["rows_out"] == sum(counts.values())
+        shutil.rmtree(out, ignore_errors=True)
+
+    def test_commit_payload_and_tables(self, spark, transcripts):
+        out = f"{OUT}_payload"
+        shutil.rmtree(out, ignore_errors=True)
+        counts = run_pipeline(spark, transcripts, FLAGSHIP_SPEC, out, run_id="p1")
+        payload = CheckpointTable(spark, f"{out}/_checkpoint").payload("p1", "route_write")
+        n = transcripts.count()
+        assert payload == {"counts": counts, "rows_in": n, "rows_out": n}
+        assert sorted(os.listdir(out)) == [
+            "_checkpoint", "group_route_role_group", "routed", "sink_counts"]
+        shutil.rmtree(out, ignore_errors=True)
+
+    def test_warm_flagship_job_budget(self, spark, transcripts):
+        """A fresh flagship run is 5 jobs: the routed write, the grouped
+        aggregate (shuffle map + result), sink_counts and the commit."""
+        for i in range(2):
+            out = f"{OUT}_jobs_{i}"
+            shutil.rmtree(out, ignore_errors=True)
+            n = _job_ids(spark, lambda: run_pipeline(
+                spark, transcripts, FLAGSHIP_SPEC, out, run_id="j1"))
+            shutil.rmtree(out, ignore_errors=True)
+        assert 0 < n <= 5
+
+    def test_fault_between_write_and_commit(self, spark, transcripts, monkeypatch):
+        clean, faulted = f"{OUT}_clean", f"{OUT}_faulted"
+        for d in (clean, faulted):
+            shutil.rmtree(d, ignore_errors=True)
+        run_pipeline(spark, transcripts, FLAGSHIP_SPEC, clean, run_id="f1")
+
+        commit = CheckpointTable.commit
+        calls = []
+
+        def fail_once(self, *args, **kwargs):
+            calls.append(args)
+            if len(calls) == 1:
+                raise RuntimeError("injected fault before commit")
+            return commit(self, *args, **kwargs)
+
+        monkeypatch.setattr(CheckpointTable, "commit", fail_once)
+        with pytest.raises(RuntimeError, match="injected"):
+            run_pipeline(spark, transcripts, FLAGSHIP_SPEC, faulted, run_id="f1")
+        # the fault struck after the routed and aggregate writes
+        assert {"routed", "sink_counts", "group_route_role_group"} <= set(os.listdir(faulted))
+        assert not os.path.exists(f"{faulted}/_checkpoint")
+        run_pipeline(spark, transcripts, FLAGSHIP_SPEC, faulted, run_id="f1")
+
+        for table in ("routed", "sink_counts", "group_route_role_group"):
+            assert _rows(spark.read.parquet(f"{faulted}/{table}")) == _rows(
+                spark.read.parquet(f"{clean}/{table}")), table
+        ck = spark.read.parquet(f"{faulted}/_checkpoint")
+        assert ck.filter((ck.run_id == "f1") & ck.committed).count() == 1
+        for d in (clean, faulted):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+class TestCheckpointFormat:
+    def test_commit_row_dtypes(self, spark, tmp_path):
+        ckpt = CheckpointTable(spark, str(tmp_path / "_checkpoint"))
+        ckpt.commit("r1", "route_write", {"a": 1})
+        assert spark.read.parquet(ckpt.path).dtypes == spark.createDataFrame([], _SCHEMA).dtypes
+
+    def test_mixed_format_reads_back(self, spark, tmp_path):
+        """Files written by createDataFrame (earlier commits, flat route →
+        count payloads) and by the JVM-built commit row share a table."""
+        out = str(tmp_path / "out")
+        path = f"{out}/_checkpoint"
+        old = [
+            ("r1", "route_write", json.dumps({"sink_a": 3}), True, None),
+            ("r1", "route_write", json.dumps({"sink_a": 4}), True, 1),
+            ("r0", "route_write", json.dumps({"sink_a": 5}), True, 2),
+        ]
+        spark.createDataFrame(old, _SCHEMA).write.mode("append").parquet(path)
+        ckpt = CheckpointTable(spark, path)
+        assert ckpt.payload("r1", "route_write") == {"sink_a": 4}
+        new = {"counts": {"sink_a": 6}, "rows_in": 6, "rows_out": 6}
+        ckpt.commit("r1", "route_write", new)
+        assert ckpt.payload("r1", "route_write") == new
+        # a run committed by the earlier format resumes with its counts,
+        # writing nothing
+        df = spark.range(1).withColumn("role", F.lit("user"))
+        assert run_pipeline(spark, df, {}, out, run_id="r0") == {"sink_a": 5}
+        assert os.listdir(out) == ["_checkpoint"]
 
 
 class TestTimeparse:
