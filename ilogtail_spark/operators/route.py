@@ -13,9 +13,11 @@ Two router flavors exist in the reference and both are supported:
 2. **Copy-mode multi-match** (C++ `Router`,
    core/pipeline/route/Router.cpp:26-49 + Condition.cpp:55,105): every
    matching conditional flusher receives the group — one row can fan out
-   to several sinks. Expressed columnar as array-of-matching-sinks +
-   `explode` (still one pass over the data; the duplicate rows exist only
-   downstream of the explode, exactly like the reference's copied groups).
+   to several sinks. Compiled to `explode(array(when(cond_i, sink_i)…))`
+   plus a `route IS NOT NULL` filter: one codegen'd Generate, one pass over
+   the data, and the upstream parse is evaluated once (the duplicate rows
+   exist only downstream of the explode, exactly like the reference's
+   copied groups).
 """
 
 from __future__ import annotations
@@ -109,20 +111,21 @@ def route_copy(
     route_col: str = "route",
 ) -> DataFrame:
     """Copy-mode fan-out (C++ Router semantics, Router.cpp:49): a row
-    matching k conditions appears k times, once per sink. Rows matching
-    nothing are dropped (no flusher received the group).
+    matching k conditions appears k times, once per sink, in condition
+    order. Rows matching nothing are dropped (no flusher received the
+    group).
 
-    One projection builds `array(case...)`, `array_compact` removes
-    non-matches, `explode` materializes the copies — no shuffle, no
-    repeated scans (vs the naive per-sink `filter` re-scan)."""
+    `explode(array(case...))` emits one candidate per condition and the
+    `IS NOT NULL` filter drops the non-matches after the Generate — no
+    shuffle, no repeated scans (vs the naive per-sink `filter` re-scan).
+    A higher-order function here (`array_compact`) falls out of
+    whole-stage codegen, and a `size(...) > 0` filter is pushed below the
+    upstream parse, which then runs again for every condition."""
     sinks = F.array(
         *[F.when(c.to_column(), F.lit(c.sink)) for c in conditions]
     )
-    return (
-        df.withColumn("__sinks__", F.array_compact(sinks))
-        .filter(F.size("__sinks__") > 0)
-        .withColumn(route_col, F.explode("__sinks__"))
-        .drop("__sinks__")
+    return df.withColumn(route_col, F.explode(sinks)).filter(
+        F.col(route_col).isNotNull()
     )
 
 

@@ -759,7 +759,9 @@ def run_ilogtail_config(
     move-vs-copy split is a C++ allocation detail — receivers are
     identical). With any Match present the write is ONE pass:
     `route_copy` + `partitionBy(route)`, one subdir per flusher under
-    `out_dir/routed`. Without Match blocks, the legacy layout stands —
+    `out_dir/routed`; the copies come out of one codegen'd Generate, so
+    the processors upstream run once per input row whatever the number
+    of flushers. Without Match blocks, the legacy layout stands —
     each flusher gets the full stream at `out_dir/flusher_{i}_{Type}`.
 
     An `aggregator_logstore_router` in the config routes rows BEFORE
@@ -828,18 +830,19 @@ def _flusher_conditions(flushers: list[dict]) -> "list | None":
 def read_inputs_stream(
     spark: SparkSession,
     config: str | dict[str, Any],
-    *,
-    max_files_per_trigger: int = 16,
 ) -> DataFrame:
     """Streaming twin of :func:`read_inputs`: the reference agent TAILS
     its input files continuously — the Structured Streaming file source
     is the cluster equivalent (new files under the watched paths become
     micro-batches; checkpointed offsets are the reference's read-offset
     checkpoint, pluginmanager/checkpoint_manager.go:40-52).
-    maxFilesPerTrigger is the backpressure knob, like the reference's
-    bounded process queues. `__source__` rides along; there is no
-    `__offset__` on this path — order-dependent processors (multiline)
-    need the stateful streaming operator instead."""
+    Each watched path reads at most one wave of max-size splits per
+    trigger (streaming/stream.py::max_bytes_per_trigger), the analog of
+    the reference's bounded process queues: a backlog of small files is
+    one micro-batch, a backlog of huge ones is cut into waves.
+    `__source__` rides along; there is no `__offset__` on this path —
+    order-dependent processors (multiline) need the stateful streaming
+    operator instead."""
     if isinstance(config, str):
         import yaml
 
@@ -849,15 +852,17 @@ def read_inputs_stream(
         raise ValueError("no inputs in config")
     from pyspark.sql import functions as F
 
+    from ilogtail_spark.streaming.stream import max_bytes_per_trigger
+
+    max_bytes = max_bytes_per_trigger(spark)
+
     def _stream_lines(i: dict) -> DataFrame:
         paths = i.get("FilePaths", [])
         if not paths:
             raise ValueError(f"{i.get('Type')}: FilePaths required "
                              "(offline frame archive)")
         streams = [
-            spark.readStream.option(
-                "maxFilesPerTrigger", max_files_per_trigger
-            ).text(p)
+            spark.readStream.option("maxBytesPerTrigger", max_bytes).text(p)
             for p in paths
         ]
         s = streams[0]
@@ -911,7 +916,9 @@ def run_ilogtail_config_stream(
 
     Drains the input available at start (AvailableNow) and returns; a
     drain still running after `timeout_sec` is stopped and raises
-    TimeoutError."""
+    TimeoutError. Each micro-batch holds at most one wave of max-size
+    splits (:func:`read_inputs_stream`), so a backlog that fits in one
+    wave is one batch: one routed write and one offset commit."""
     from pyspark.sql import functions as F
 
     from ilogtail_spark.operators.route import route_copy

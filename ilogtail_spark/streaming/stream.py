@@ -35,16 +35,33 @@ TRANSCRIPT_SCHEMA = T.StructType(
 )
 
 
-def stream_transcripts(
-    spark: SparkSession, path: str, *, max_files_per_trigger: int = 4
-) -> DataFrame:
-    """File-source stream over a transcript parquet directory.
-    maxFilesPerTrigger is the backpressure knob — the analog of the
+def max_bytes_per_trigger(spark: SparkSession) -> int:
+    """The trigger size of every file-stream source: at most one full wave
+    of max-size splits, `spark.sql.files.maxPartitionBytes` × the default
+    parallelism. This is the backpressure bound, the analog of the
     reference's bounded process queues
-    (core/pipeline/queue/BoundedProcessQueue.cpp)."""
+    (core/pipeline/queue/BoundedProcessQueue.cpp). It caps the work a
+    failed micro-batch redoes, whatever the file sizes, and lets a backlog
+    of small rotated files drain in one micro-batch instead of paying the
+    per-batch write and commit cost again and again. The source always
+    takes at least one file, so a file larger than a wave is one batch.
+
+    The conf prints with a unit (`134217728b`, `1k`), so it is read
+    through Spark's own byte-string parser."""
+    jvm = spark.sparkContext._jvm
+    split = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes")
+    )
+    return split * spark.sparkContext.defaultParallelism
+
+
+def stream_transcripts(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a transcript parquet directory; each
+    trigger reads at most :func:`max_bytes_per_trigger` bytes of new
+    files."""
     return (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxBytesPerTrigger", max_bytes_per_trigger(spark))
         .parquet(path)
     )
 

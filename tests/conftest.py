@@ -1,10 +1,14 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, so a test run in any copy of the
+# repository tests that copy's package
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO_ROOT)
 
 from ilogtail_spark.session import get_spark  # noqa: E402
 
@@ -22,6 +26,16 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def max_partition_bytes(spark):
+    """Setter for the session's `spark.sql.files.maxPartitionBytes`, which
+    also sizes every file-stream trigger; restored after the test."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, old)
 
 
 @pytest.fixture(scope="session")

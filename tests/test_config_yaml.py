@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -614,6 +615,51 @@ class TestStreamingConfig:
             "flusher_0_flusher_sls": 3,
             "flusher_1_flusher_file": 4,
         }
+
+    def test_trigger_sized_by_bytes(self, spark, tmp_path, max_partition_bytes):
+        """A backlog of small files drains in one micro-batch at the
+        default wave (one max-size split per core); a smaller wave cuts
+        the same backlog into several. Either way every line reaches the
+        unconditional flusher exactly once, also when the drain is
+        replayed from a wiped checkpoint."""
+        import pyspark.sql.functions as F
+
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        watch = tmp_path / "logs"
+        watch.mkdir()
+        n_files, per_file = 24, 40
+        for f in range(n_files):
+            (watch / f"{f:02d}.log").write_text("".join(
+                f"{'ERROR' if i % 3 == 0 else 'INFO'} {f * per_file + i}\n"
+                for i in range(per_file)
+            ))
+        cfg = dict(self.CFG, inputs=[{"Type": "input_file", "FilePaths": [str(watch)]}])
+        want = sorted(str(i) for i in range(n_files * per_file))
+        n_error = len(range(0, per_file, 3)) * n_files
+
+        def drain(out_dir):
+            run_ilogtail_config_stream(spark, cfg, out_dir=out_dir, timeout_sec=90)
+            df = spark.read.parquet(f"{out_dir}/routed")
+            codes = df.filter(F.col("route") == "flusher_1_flusher_file").select("code")
+            assert sorted(r["code"] for r in codes.collect()) == want
+            assert df.filter(F.col("route") == "flusher_0_flusher_sls").count() == n_error
+            return sorted(r["batch_id"] for r in df.select("batch_id").distinct().collect())
+
+        def replay(out_dir):
+            shutil.rmtree(f"{out_dir}/_stream_ckpt")
+            return drain(out_dir)
+
+        one_wave = str(tmp_path / "one_wave")
+        assert drain(one_wave) == [0]
+        assert replay(one_wave) == [0]
+
+        total = sum(p.stat().st_size for p in watch.iterdir())
+        max_partition_bytes(total // (3 * spark.sparkContext.defaultParallelism))
+        waves = str(tmp_path / "waves")
+        batches = drain(waves)
+        assert len(batches) >= 2
+        assert replay(waves) == batches
 
     def test_multiline_raises_on_stream(self, spark, tmp_path):
         from ilogtail_spark.plans.config import run_ilogtail_config_stream

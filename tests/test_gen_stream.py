@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -88,19 +89,24 @@ class TestStreaming:
         for r in got:
             assert exp_map[(r["window_start"], r["route"])] == r["log_count"]
 
-    def test_stream_equals_batch(self, spark):
+    def test_stream_equals_batch(self, spark, max_partition_bytes):
         shutil.rmtree(STREAM_DIR, ignore_errors=True)
         shutil.rmtree(STREAM_OUT, ignore_errors=True)
         t = gen_transcripts(spark, 40)
-        # several files so availableNow processes multiple micro-batches
         t.repartition(6).write.parquet(STREAM_DIR)
+        # several files and a wave of about a third of them, so
+        # availableNow processes multiple micro-batches
+        total = sum(
+            os.path.getsize(os.path.join(STREAM_DIR, f))
+            for f in os.listdir(STREAM_DIR) if f.endswith(".parquet")
+        )
+        max_partition_bytes(total // (3 * spark.sparkContext.defaultParallelism))
 
         run_stream_pipeline(spark, STREAM_DIR, STREAM_OUT, FLAGSHIP_SPEC)
 
-        got = (
-            spark.read.parquet(f"{STREAM_OUT}/routed")
-            .groupBy("route").agg(F.count(F.lit(1)).alias("n"))
-        )
+        routed = spark.read.parquet(f"{STREAM_OUT}/routed")
+        assert routed.select("batch_id").distinct().count() >= 2
+        got = routed.groupBy("route").agg(F.count(F.lit(1)).alias("n"))
         exp = (
             build_pipeline(spark.read.parquet(STREAM_DIR), FLAGSHIP_SPEC)
             .groupBy("route").agg(F.count(F.lit(1)).alias("n"))

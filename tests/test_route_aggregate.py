@@ -14,6 +14,7 @@ from ilogtail_spark.operators.aggregate import (
     stable_order_salted,
 )
 from ilogtail_spark.operators.multiline import merge_multiline
+from ilogtail_spark.operators.parse import kv_parse
 from ilogtail_spark.operators.route import (
     CopyCondition,
     RouteRule,
@@ -64,6 +65,74 @@ class TestRouteCopy:
     def test_no_match_dropped(self, spark):
         df = spark.createDataFrame([("x",)], "tool string")
         assert route_copy(df, [CopyCondition("s", "tool", "y")]).count() == 0
+
+    # rows matching every condition, one, none, and rows with null keys
+    # (a missing key and a null line)
+    KV_LINES = [
+        "level:ERROR\tsvc:api", "level:ERROR\tsvc:db", "level:INFO\tsvc:api",
+        "level:INFO\tsvc:db", "svc:api", "level:ERROR", "", None,
+    ]
+    KV_CONDS = [
+        CopyCondition("s_err", "level", "ERROR"),
+        CopyCondition("s_api", "svc", "api"),
+        CopyCondition("s_all"),
+    ]
+
+    def _kv_routed(self, spark, conds):
+        df = spark.createDataFrame([(i, x) for i, x in enumerate(self.KV_LINES)],
+                                   "id int, content string")
+        parsed = kv_parse(df, "content", delimiter="\t", separator=":",
+                          keys=["level", "svc"])
+        return parsed, route_copy(parsed, conds)
+
+    def test_copy_kernel_parses_once_without_lambdas(self, spark):
+        _, out = self._kv_routed(spark, self.KV_CONDS)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan.lower()
+        assert "ArrayFilter" not in plan
+        assert plan.count("str_to_map") == 1, plan
+
+    def test_copy_kernel_fully_codegen(self, spark):
+        _, out = self._kv_routed(spark, self.KV_CONDS)
+        outside = []
+
+        def walk(node, inside):
+            name = node.nodeName()
+            if name.startswith("WholeStageCodegen"):
+                inside = True
+            elif name == "InputAdapter":
+                inside = False
+            elif not inside:
+                outside.append(name)
+            children = node.children()
+            for i in range(children.size()):
+                walk(children.apply(i), inside)
+
+        walk(out._jdf.queryExecution().executedPlan(), False)
+        assert outside == []
+
+    @pytest.mark.parametrize("n_conds", [3, 2], ids=["all", "conditional"])
+    def test_copy_equals_union_of_filters(self, spark, n_conds):
+        conds = self.KV_CONDS[:n_conds]
+        parsed, out = self._kv_routed(spark, conds)
+        want = None
+        for c in conds:
+            part = parsed.filter(c.to_column()).withColumn("route", F.lit(c.sink))
+            want = part if want is None else want.unionByName(part)
+        cols = ["id", "level", "svc", "route"]
+        got_rows = sorted(tuple(r) for r in out.select(cols).collect())
+        assert got_rows == sorted(tuple(r) for r in want.select(cols).collect())
+        # every copy of a row comes out in condition order
+        order = [c.sink for c in conds]
+        by_id: dict[int, list[str]] = {}
+        for r in out.select("id", "route").collect():
+            by_id.setdefault(r["id"], []).append(r["route"])
+        for routes in by_id.values():
+            assert routes == [s for s in order if s in routes]
+        if n_conds == 2:
+            # rows matching no condition (INFO/db, the empty and the null
+            # line) are dropped
+            assert set(by_id) == {0, 1, 2, 4, 5}
 
 
 class TestShardHash:

@@ -14,15 +14,18 @@ import sys
 import zipfile
 
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _zip_package(dst: str) -> str:
-    pkg_root = "/root/repo/ilogtail_spark"
+    pkg_root = os.path.join(REPO_ROOT, "ilogtail_spark")
     zpath = os.path.join(dst, "ilogtail_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_root):
             for f in files:
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, "/root/repo"))
+                    z.write(full, os.path.relpath(full, REPO_ROOT))
     return zpath
 
 
@@ -78,3 +81,13 @@ class TestSparkSubmit:
         # committed stages are skipped and counts are identical
         second = run()
         assert second == first
+
+
+def test_package_imported_from_this_checkout():
+    # conftest puts its own checkout first on sys.path: a test run in a
+    # copy of the repository must test that copy's package
+    import ilogtail_spark
+    from conftest import REPO_ROOT
+
+    pkg = os.path.realpath(ilogtail_spark.__file__)
+    assert pkg.startswith(os.path.join(os.path.realpath(REPO_ROOT), ""))

@@ -4,12 +4,14 @@ values. Usage: python tools/check_oracles.py [sf_dir] [name ...]"""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def norm(v):

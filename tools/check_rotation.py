@@ -33,7 +33,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def latest_round(root: str) -> int:
@@ -60,8 +61,7 @@ def main() -> int:
         ordered_queries,
     )
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    now = latest_round(root)
+    now = latest_round(ROOT)
     last = _last_green_rounds()
     order = list(ordered_queries())
     n_oracle = len(ORACLES)

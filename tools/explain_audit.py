@@ -6,10 +6,12 @@ shuffles, broadcast joins where dims are small. Writes BENCH/PLANS.md.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 CHECKS = {
     # query: (must_contain, must_not_contain)
@@ -449,7 +451,7 @@ def main() -> None:
               + (f" {once}x{n_expr}" if once else ""))
         sections.append(f"## {name} — {status}\n\n```\n{plan.strip()}\n```\n")
 
-    with open("/root/repo/BENCH/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH", "PLANS.md"), "w") as f:
         f.write(
             "# Physical plans of key queries (plan-hygiene audit)\n\n"
             "Checked properties: column-pruned `ReadSchema`, broadcast joins\n"
