@@ -62,7 +62,6 @@ def route_exclusive(
     *,
     default_sink: str = "sink_default",
     drop_dismatch: bool = False,
-    route_col: str = "route",
 ) -> DataFrame:
     """First-match-exclusive router (aggregator_logstore_router).
 
@@ -82,9 +81,9 @@ def route_exclusive(
         expr = expr.otherwise(F.lit(None).cast("string"))
     else:
         expr = expr.otherwise(F.lit(default_sink))
-    out = df.withColumn(route_col, expr)
+    out = df.withColumn("route", expr)
     if drop_dismatch:
-        out = out.filter(F.col(route_col).isNotNull())
+        out = out.filter(F.col("route").isNotNull())
     return out
 
 
@@ -104,12 +103,7 @@ class CopyCondition:
         return F.col(self.key).isNotNull() & (F.col(self.key) == F.lit(self.value))
 
 
-def route_copy(
-    df: DataFrame,
-    conditions: list[CopyCondition],
-    *,
-    route_col: str = "route",
-) -> DataFrame:
+def route_copy(df: DataFrame, conditions: list[CopyCondition]) -> DataFrame:
     """Copy-mode fan-out (C++ Router semantics, Router.cpp:49): a row
     matching k conditions appears k times, once per sink, in condition
     order. Rows matching nothing are dropped (no flusher received the
@@ -124,26 +118,34 @@ def route_copy(
     sinks = F.array(
         *[F.when(c.to_column(), F.lit(c.sink)) for c in conditions]
     )
-    return df.withColumn(route_col, F.explode(sinks)).filter(
-        F.col(route_col).isNotNull()
-    )
+    return df.withColumn("route", F.explode(sinks)).filter(F.col("route").isNotNull())
 
 
-def write_routed(
-    df: DataFrame,
-    base_path: str,
-    *,
-    route_col: str = "route",
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Multi-sink write: one job, one pass, one dir per sink — the Spark
-    equivalent of the reference's per-logstore flusher queues
+def write_routed(df: DataFrame, base_path: str, *, batch_id: int | None = None) -> None:
+    """The one routed-row sink of every runner: one job, one pass, parquet
+    under `base_path/route=<sink>/` — the Spark equivalent of the
+    reference's per-logstore flusher queues
     (core/pipeline/queue/SenderQueueManager.cpp:91). `partitionBy(route)`
-    gives dynamic partition insertion; Iceberg/parquet file sizing handles
-    the reference's 1024-log/3MiB group caps physically
-    (plugins/aggregator/baseagg/aggregator_base.go:26-29)."""
-    df.write.mode(mode).partitionBy(route_col).format(fmt).save(base_path)
+    gives dynamic partition insertion; parquet file sizing handles the
+    reference's 1024-log/3MiB group caps physically
+    (plugins/aggregator/baseagg/aggregator_base.go:26-29).
+
+    A batch run overwrites `base_path`. A stream micro-batch passes its
+    `batch_id`: rows land under `batch_id=<n>/route=<sink>/` and a retried
+    batch dynamically overwrites only its own partitions, so replaying it
+    after a partial failure cannot duplicate rows — checkpointed offsets
+    plus this idempotent write are the exactly-once contract, the analog
+    of the reference's send-queue dedup on pack id."""
+    if batch_id is None:
+        df.write.mode("overwrite").partitionBy("route").parquet(base_path)
+        return
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", "route")
+        .parquet(base_path)
+    )
 
 
 def route_opentelemetry(

@@ -752,24 +752,18 @@ def run_ilogtail_config(
     flushers. Returns the processed (and, when the config routes, routed)
     DataFrame — lazy — so callers can also aggregate it.
 
-    Flusher routing follows the C++ Router (Router.cpp:26-49 +
-    Condition.cpp:55,105): a flusher may carry a `Match` condition
-    (`{Type: tag, Key: k, Value: v}`); every matching conditional flusher
-    receives the rows, unconditional flushers always do (the reference's
-    move-vs-copy split is a C++ allocation detail — receivers are
-    identical). With any Match present the write is ONE pass:
-    `route_copy` + `partitionBy(route)`, one subdir per flusher under
-    `out_dir/routed`; the copies come out of one codegen'd Generate, so
-    the processors upstream run once per input row whatever the number
-    of flushers. Without Match blocks, the legacy layout stands —
-    each flusher gets the full stream at `out_dir/flusher_{i}_{Type}`.
+    With `out_dir`, the flushers receive the rows through
+    :func:`_fan_out` and ONE `write_routed` job: parquet under
+    `out_dir/routed/route=<flusher>/`, one subdir per flusher named
+    `flusher_<i>_<Type>`. The copies come out of one codegen'd Generate,
+    so the processors upstream run once per input row whatever the
+    number of flushers. A config without flushers raises ValueError.
 
     An `aggregator_logstore_router` in the config routes rows BEFORE
-    flushers (exclusive first-match `route` column), matching the
-    reference's aggregator→flusher order."""
-    from pyspark.sql import functions as F
-
-    from ilogtail_spark.operators.route import route_copy
+    flushers (exclusive first-match `route` column, which the written
+    rows carry as `__logstore__`), matching the reference's
+    aggregator→flusher order."""
+    from ilogtail_spark.operators.route import write_routed
     from ilogtail_spark.plans.pipeline import apply_processors, apply_router
 
     if isinstance(config, str):
@@ -777,43 +771,27 @@ def run_ilogtail_config(
 
         config = yaml.safe_load(config)
     spec = compile_ilogtail_config(config)
+    conds = _flusher_conditions(spec["flushers"]) if out_dir else None
     src = df if df is not None else read_inputs(spark, config)
     out = apply_processors(src, spec["processors"])
     if spec.get("router"):
         out = apply_router(out, spec["router"])
     if out_dir:
-        # flusher records don't carry the read-context metadata columns
-        # (the reference only emits file/offset with EnableLogPositionMeta)
-        sink_df = out.drop("__source__", "__offset__")
-        flushers = spec["flushers"]
-        conds = _flusher_conditions(flushers)
-        if conds is not None:
-            routed = route_copy(sink_df, conds, route_col="__flusher__")
-            (
-                routed.withColumn("route", F.col("__flusher__"))
-                .drop("__flusher__")
-                .write.mode("overwrite")
-                .partitionBy("route")
-                .json(f"{out_dir}/routed")
-            )
-        else:
-            for i, fl in enumerate(flushers):
-                (
-                    sink_df.write.mode("overwrite").json(
-                        f"{out_dir}/flusher_{i}_{fl.get('Type', 'sink')}"
-                    )
-                )
+        write_routed(_fan_out(out, conds), f"{out_dir}/routed")
     return out
 
 
-def _flusher_conditions(flushers: list[dict]) -> "list | None":
-    """Flusher `Match` blocks → route_copy conditions, or None when no
-    flusher carries one (legacy everyone-gets-everything layout).
-    Shared by the batch and streaming runners."""
+def _flusher_conditions(flushers: list[dict]) -> list:
+    """Flusher list → route_copy conditions, one per flusher, named
+    `flusher_<i>_<Type>`. The C++ Router (Router.cpp:26-49 +
+    Condition.cpp:55,105) sends a group to every flusher whose `Match`
+    (`{Type: tag, Key: k, Value: v}`) it meets; a flusher without `Match`
+    receives every group. Shared by the batch and streaming runners; an
+    empty `flushers` section raises, since nothing would be written."""
     from ilogtail_spark.operators.route import CopyCondition
 
-    if not any(fl.get("Match") for fl in flushers):
-        return None
+    if not flushers:
+        raise ValueError("config has an empty flushers section: nothing to write to")
     conds = []
     for i, fl in enumerate(flushers):
         name = f"flusher_{i}_{fl.get('Type', 'sink')}"
@@ -825,6 +803,21 @@ def _flusher_conditions(flushers: list[dict]) -> "list | None":
         else:
             raise KeyError(f"unsupported flusher Match.Type: {m.get('Type')!r}")
     return conds
+
+
+def _fan_out(df: DataFrame, conds: list) -> DataFrame:
+    """The flusher fan-out both YAML runners write: one copy of each row
+    per flusher that receives it, the flusher name in `route`. Flusher
+    records don't carry the read-context metadata columns (the reference
+    only emits file/offset with EnableLogPositionMeta). A logstore
+    router's `route` moves to `__logstore__`, the column the
+    opentelemetry and skywalking routers fill, so it survives."""
+    from ilogtail_spark.operators.route import route_copy
+
+    df = df.drop("__source__", "__offset__")
+    if "route" in df.columns:
+        df = df.withColumnRenamed("route", "__logstore__")
+    return route_copy(df, conds)
 
 
 def read_inputs_stream(
@@ -903,26 +896,28 @@ def run_ilogtail_config_stream(
     """Streaming end-to-end for the SAME YAML file the batch runner
     takes — the reference agent is a continuously-running process, so a
     config must also compile to a Structured Streaming query. Stateless
-    processors and the router apply 1:1 on the stream; flushers write
-    per micro-batch through the same Match-condition routing, landing
-    under `batch_id=<n>/route=<flusher>` partitions with dynamic
-    partition overwrite — a retried micro-batch overwrites only its own
-    batch, so checkpointed offsets + idempotent writes give exactly-once
-    delivery across restarts (the reference's pack-id send dedup).
+    processors and the router apply 1:1 on the stream; each micro-batch
+    goes through the batch runner's flusher fan-out (:func:`_fan_out`)
+    and one `write_routed` job under
+    `out_dir/routed/batch_id=<n>/route=<flusher>/`. A retried
+    micro-batch overwrites only its own batch, so checkpointed offsets +
+    idempotent writes give exactly-once delivery across restarts (the
+    reference's pack-id send dedup). A config without flushers raises
+    ValueError.
 
     Order-dependent processors (multiline merge) raise here: on a
     stream they need the cross-batch stateful operator
     (streaming/stateful.py::stream_merge_multiline), not a window.
 
-    Drains the input available at start (AvailableNow) and returns; a
-    drain still running after `timeout_sec` is stopped and raises
-    TimeoutError. Each micro-batch holds at most one wave of max-size
-    splits (:func:`read_inputs_stream`), so a backlog that fits in one
-    wave is one batch: one routed write and one offset commit."""
-    from pyspark.sql import functions as F
-
-    from ilogtail_spark.operators.route import route_copy
+    Drains the input available at start through
+    `streaming/stream.py::drain` and returns; a drain still running
+    after `timeout_sec` is stopped and raises TimeoutError. Each
+    micro-batch holds at most one wave of max-size splits
+    (:func:`read_inputs_stream`), so a backlog that fits in one wave is
+    one batch: one routed write and one offset commit."""
+    from ilogtail_spark.operators.route import write_routed
     from ilogtail_spark.plans.pipeline import apply_processors, apply_router
+    from ilogtail_spark.streaming.stream import drain
 
     if isinstance(config, str):
         import yaml
@@ -936,45 +931,14 @@ def run_ilogtail_config_stream(
                 "stateful operator (streaming/stateful.py::"
                 "stream_merge_multiline), not the batch window form"
             )
+    conds = _flusher_conditions(spec["flushers"])
     src = df if df is not None else read_inputs_stream(spark, config)
     out = apply_processors(src, spec["processors"])
     if spec.get("router"):
         out = apply_router(out, spec["router"])
-    conds = _flusher_conditions(spec["flushers"])
-    flushers = spec["flushers"]
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        sink_df = batch_df.drop("__source__", "__offset__")
-        if conds is not None:
-            routed = (
-                route_copy(sink_df, conds, route_col="__flusher__")
-                .withColumn("route", F.col("__flusher__"))
-                .drop("__flusher__")
-                .withColumn("batch_id", F.lit(batch_id))
-            )
-            (
-                routed.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "route")
-                .parquet(f"{out_dir}/routed")
-            )
-        else:
-            stamped = sink_df.withColumn("batch_id", F.lit(batch_id))
-            for i, fl in enumerate(flushers):
-                (
-                    stamped.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(f"{out_dir}/flusher_{i}_{fl.get('Type', 'sink')}")
-                )
-
-    writer = (
-        out.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", f"{out_dir}/_stream_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
+    drain(
+        out,
+        lambda b, i: write_routed(_fan_out(b, conds), f"{out_dir}/routed", batch_id=i),
+        out_dir,
+        timeout_sec,
     )
-    q = writer.start()
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"stream did not drain within {timeout_sec} s")

@@ -269,8 +269,10 @@ def run_pipeline(
 
     Returns per-sink row counts. Like the reference, which flushes each
     batch once and keeps its counters in memory (Pipeline.h:110-117), the
-    sinks are ONE `write_routed` job (sharded pre-write when `shard_keys`
-    is given) that carries rows in and per-route counts as Observations;
+    sinks are ONE `write_routed` job — the sink every runner writes
+    through, parquet under `out_dir/routed/route=<sink>/` (sharded
+    pre-write when `shard_keys` is given) — that carries rows in and
+    per-route counts as Observations;
     `sink_counts` is written from them, the other aggregators from a
     schema-given re-read of `routed/`, and the commit payload holds
     `counts`, `rows_in` and `rows_out`. A committed `run_id` returns its

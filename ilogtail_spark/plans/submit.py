@@ -40,6 +40,8 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--streaming", action="store_true",
                    help="run as Structured Streaming (availableNow)")
     args = p.parse_args(argv)
+    if args.streaming and args.shard_keys is not None:
+        p.error("--shard-keys shards a batch write; --streaming does not take it")
 
     from ilogtail_spark.plans.pipeline import FLAGSHIP_SPEC, run_pipeline
     from ilogtail_spark.session import get_spark

@@ -17,7 +17,7 @@ ranges; the file source is the sandbox stand-in with identical semantics
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,6 +101,32 @@ def windowed_route_counts(
     )
 
 
+def drain(
+    df: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    out_dir: str,
+    timeout_sec: float,
+) -> None:
+    """Run `sink(batch_df, batch_id)` on every micro-batch of the stream
+    `df` until the input available at start is consumed
+    (`Trigger.AvailableNow`, the reference's one-shot historical import,
+    core/plugin/input/InputStaticFile.cpp), with offsets checkpointed at
+    `out_dir/_stream_ckpt` so a rerun picks up only new input.
+    `foreachBatch` is the reference's FlusherV1.Flush extension point
+    (pkg/pipeline/flusher.go:60-66). A drain still running after
+    `timeout_sec` is stopped and raises TimeoutError."""
+    q = (
+        df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", f"{out_dir}/_stream_ckpt")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(f"stream did not drain within {timeout_sec} s")
+
+
 def run_stream_pipeline(
     spark: SparkSession,
     in_path: str,
@@ -109,42 +135,17 @@ def run_stream_pipeline(
     *,
     timeout_sec: float = 120,
 ) -> None:
-    """Stream → build_pipeline (same spec as batch) → foreachBatch routed
-    write. foreachBatch is the reference's FlusherV1.Flush extension point
-    (pkg/pipeline/flusher.go:60-66) — per micro-batch, write each sink.
-
-    Drains the input available at start (AvailableNow) and returns; a
-    drain still running after `timeout_sec` is stopped and raises
-    TimeoutError.
-    """
+    """Stream → build_pipeline (same spec as batch) → :func:`drain`, each
+    micro-batch written by `write_routed` under
+    `out_dir/routed/batch_id=<n>/route=<sink>/`. Returns once the input
+    available at start is drained; raises TimeoutError after
+    `timeout_sec`."""
+    from ilogtail_spark.operators.route import write_routed
     from ilogtail_spark.plans.pipeline import build_pipeline
 
-    src = stream_transcripts(spark, in_path)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        # Idempotent per-batch sink: rows land under their batch_id
-        # partition and a retried micro-batch dynamically OVERWRITES only
-        # its own batch_id partitions — replaying after a partial failure
-        # cannot duplicate rows (exactly-once = checkpointed offsets +
-        # this idempotent write, the analog of the reference's
-        # send-queue dedup on pack id).
-        routed = build_pipeline(batch_df, spec).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            routed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "route")
-            .parquet(f"{out_dir}/routed")
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", f"{out_dir}/_stream_ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
+    drain(
+        stream_transcripts(spark, in_path),
+        lambda b, i: write_routed(build_pipeline(b, spec), f"{out_dir}/routed", batch_id=i),
+        out_dir,
+        timeout_sec,
     )
-    q = writer.start()
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"stream did not drain within {timeout_sec} s")

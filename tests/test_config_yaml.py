@@ -70,15 +70,10 @@ class TestYamlConfig:
         assert rows["10.0.0.1"]["method_class"] == "read"
         assert rows["10.0.0.2"]["status"] == "500"
         assert rows["10.0.0.2"]["method_class"] == "write"
-        # flusher wrote jsonlines
-        sink = [d for d in os.listdir(out_dir) if d.startswith("flusher_0")][0]
-        files = [
-            f for f in os.listdir(os.path.join(out_dir, sink)) if f.endswith(".json")
-        ]
-        recs = []
-        for f in files:
-            with open(os.path.join(out_dir, sink, f)) as fh:
-                recs += [json.loads(line) for line in fh if line.strip()]
+        # the flusher's rows are parquet under routed/route=<flusher>
+        recs = spark.read.parquet(
+            os.path.join(out_dir, "routed", "route=flusher_0_flusher_stdout")
+        ).collect()
         assert {r["remote_addr"] for r in recs} == {"10.0.0.1", "10.0.0.2"}
 
     def test_source_kept_on_parse_error_default(self, spark, tmp_path):
@@ -525,11 +520,7 @@ class TestFlusherRouting:
         for d in os.listdir(routed_dir):
             if not d.startswith("route="):
                 continue
-            n = 0
-            for f in os.listdir(os.path.join(routed_dir, d)):
-                if f.endswith(".json"):
-                    with open(os.path.join(routed_dir, d, f)) as fh:
-                        n += sum(1 for line in fh if line.strip())
+            n = spark.read.parquet(os.path.join(routed_dir, d)).count()
             got[d.removeprefix("route=")] = n
         # hand-built route_copy twin
         conds = [
@@ -826,6 +817,117 @@ class TestNetworkInputReplay:
             read_inputs(spark, {"inputs": [{"Type": "service_syslog"}]})
 
 
+class TestOneSinkLayout:
+    """Every YAML run writes its flushers through one fan-out and one
+    routed write: parquet under routed/route=<flusher> (batch) or
+    routed/batch_id=<n>/route=<flusher> (stream)."""
+
+    ROUTER_CFG = {
+        "processors": [{
+            "Type": "processor_regex", "SourceKey": "content",
+            "Regex": r"(\w+) (\d+)", "Keys": ["level", "code"],
+        }],
+        "aggregators": [{
+            "Type": "aggregator_logstore_router", "SourceKey": "level",
+            "RouterRegex": ["ERROR"], "RouterLogstore": ["errors"],
+        }],
+        "flushers": [
+            {"Type": "flusher_sls",
+             "Match": {"Type": "tag", "Key": "level", "Value": "ERROR"}},
+            {"Type": "flusher_file"},
+        ],
+    }
+    ROUTER_WANT = [
+        ("flusher_0_flusher_sls", "1", "errors"),
+        ("flusher_0_flusher_sls", "3", "errors"),
+        ("flusher_1_flusher_file", "1", "errors"),
+        ("flusher_1_flusher_file", "2", "sink_default"),
+        ("flusher_1_flusher_file", "3", "errors"),
+    ]
+
+    def _router_cfg(self, tmp_path):
+        watch = tmp_path / "logs"
+        watch.mkdir()
+        (watch / "a.log").write_text("ERROR 1\nINFO 2\nERROR 3\n")
+        return dict(self.ROUTER_CFG,
+                    inputs=[{"Type": "input_file", "FilePaths": [str(watch)]}])
+
+    @staticmethod
+    def _logstore_pairs(routed):
+        return sorted((r["route"], r["code"], r["__logstore__"]) for r in routed.collect())
+
+    def test_router_value_kept_batch(self, spark, tmp_path):
+        out_dir = str(tmp_path / "sinks")
+        run_ilogtail_config(spark, self._router_cfg(tmp_path), out_dir=out_dir)
+        routed = spark.read.parquet(f"{out_dir}/routed")
+        assert self._logstore_pairs(routed) == self.ROUTER_WANT
+
+    def test_router_value_kept_stream(self, spark, tmp_path):
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        out_dir = str(tmp_path / "sinks")
+        run_ilogtail_config_stream(spark, self._router_cfg(tmp_path),
+                                   out_dir=out_dir, timeout_sec=90)
+        routed = spark.read.parquet(f"{out_dir}/routed")
+        assert self._logstore_pairs(routed) == self.ROUTER_WANT
+
+    def test_batch_and_stream_write_the_same_rows(self, spark, tmp_path):
+        from collections import Counter
+
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        cfg = self._router_cfg(tmp_path)
+        batch_dir, stream_dir = str(tmp_path / "batch"), str(tmp_path / "stream")
+        run_ilogtail_config(spark, cfg, out_dir=batch_dir)
+        run_ilogtail_config_stream(spark, cfg, out_dir=stream_dir, timeout_sec=90)
+
+        def pairs(out_dir):
+            rows = spark.read.parquet(f"{out_dir}/routed").drop("batch_id").collect()
+            return Counter(
+                (r["route"], tuple(sorted((k, v) for k, v in r.asDict().items()
+                                          if k != "route")))
+                for r in rows
+            )
+
+        batch = pairs(batch_dir)
+        assert sum(batch.values()) == len(self.ROUTER_WANT)
+        assert batch == pairs(stream_dir)
+
+    def test_unmatched_flushers_one_write_job(self, spark, tmp_path):
+        """Three flushers without Match are one routed write job, and
+        every input row lands once under each flusher."""
+        from test_pipeline_e2e import _job_ids
+
+        df = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], "content string")
+        cfg = {"processors": [], "flushers": [
+            {"Type": "flusher_sls"}, {"Type": "flusher_kafka"}, {"Type": "flusher_file"}]}
+        out_dir = str(tmp_path / "sinks")
+        n = _job_ids(spark, lambda: run_ilogtail_config(spark, cfg, df=df, out_dir=out_dir))
+        assert n == 1
+        routed = spark.read.parquet(f"{out_dir}/routed")
+        got = sorted((r["route"], r["content"]) for r in routed.collect())
+        assert got == sorted(
+            (f"flusher_{i}_{t}", c)
+            for i, t in enumerate(["flusher_sls", "flusher_kafka", "flusher_file"])
+            for c in "abcd"
+        )
+
+    def test_no_flushers_raises_batch(self, spark, tmp_path):
+        df = spark.createDataFrame([("x",)], "content string")
+        with pytest.raises(ValueError, match="flushers"):
+            run_ilogtail_config(spark, {"processors": [], "flushers": []},
+                                df=df, out_dir=str(tmp_path / "s"))
+
+    def test_no_flushers_raises_stream(self, spark, tmp_path):
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        (tmp_path / "a.log").write_text("ERROR 1\n")
+        cfg = {"inputs": [{"Type": "input_file", "FilePaths": [str(tmp_path)]}],
+               "processors": []}
+        with pytest.raises(ValueError, match="flushers"):
+            run_ilogtail_config_stream(spark, cfg, out_dir=str(tmp_path / "o"))
+
+
 class TestNetworkInputStream:
     def test_syslog_stream_decode(self, spark, tmp_path):
         """service_syslog frames tailed as a stream decode through the
@@ -846,6 +948,6 @@ class TestNetworkInputStream:
         }
         out_dir = str(tmp_path / "sinks")
         run_ilogtail_config_stream(spark, cfg, out_dir=out_dir, timeout_sec=90)
-        got = spark.read.parquet(f"{out_dir}/flusher_0_flusher_file")
+        got = spark.read.parquet(f"{out_dir}/routed").filter("route = 'flusher_0_flusher_file'")
         rows = sorted((r["_program_"], r["content"]) for r in got.collect())
         assert rows == [("program", "message one"), ("root", "message two")]

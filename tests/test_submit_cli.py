@@ -13,6 +13,8 @@ import subprocess
 import sys
 import zipfile
 
+import pytest
+
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -91,3 +93,14 @@ def test_package_imported_from_this_checkout():
 
     pkg = os.path.realpath(ilogtail_spark.__file__)
     assert pkg.startswith(os.path.join(os.path.realpath(REPO_ROOT), ""))
+
+
+def test_streaming_rejects_shard_keys(capsys):
+    # a stream run has no pre-write shard step: the flag is an error,
+    # not silently dropped
+    from ilogtail_spark.plans.submit import main
+
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", "in", "--out", "out", "--streaming", "--shard-keys", "conv_id"])
+    assert exc.value.code == 2
+    assert "--shard-keys" in capsys.readouterr().err
