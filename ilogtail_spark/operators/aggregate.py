@@ -152,6 +152,9 @@ def stable_order_salted(
     )
 
 
+_IDENTITIES = (("conv_id", "turn_idx"), ("__source__", "__offset__"))
+
+
 def add_lineage(
     df: DataFrame,
     config_name: str,
@@ -163,16 +166,21 @@ def add_lineage(
     (plugins/aggregator/baseagg/aggregator_base.go:140-147,
     util.NewPackIDPrefix): prefix = MD5(configName), suffix = sequence.
 
-    deterministic=True derives the suffix from the row's own identity
-    (conv_id, turn_idx) so re-runs produce identical lineage — required
-    for idempotent resume (SURVEY.md §7.1.7). deterministic=False mirrors
-    the reference's per-producer counter via
+    deterministic=True derives the suffix from the row's own identity so
+    re-runs produce identical lineage — required for idempotent resume
+    (SURVEY.md §7.1.7): (conv_id, turn_idx) for a transcript turn, else
+    the read context (__source__, __offset__) that plans/config.py's
+    batch reader attaches to a line; a row with neither raises.
+    deterministic=False mirrors the reference's per-producer counter via
     (spark_partition_id, monotonically row_number) — cheaper but
     run-dependent, like the reference's restart-dependent pack ids.
     """
     prefix = F.upper(F.substring(F.md5(F.lit(config_name)), 1, 16))
     if deterministic:
-        suffix = F.concat_ws("-", F.col("conv_id"), F.col("turn_idx").cast("string"))
+        ident = next((k for k in _IDENTITIES if set(k) <= set(df.columns)), None)
+        if ident is None:
+            raise ValueError(f"lineage needs one of the row identities {_IDENTITIES}")
+        suffix = F.concat_ws("-", *(F.col(c).cast("string") for c in ident))
         return df.withColumn(lineage_col, F.concat(prefix, F.lit("-"), suffix))
     part = F.spark_partition_id()
     w = Window.partitionBy(part).orderBy(F.monotonically_increasing_id())

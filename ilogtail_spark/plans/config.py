@@ -23,6 +23,7 @@ import re as _re
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # processor adapters — reference plugin param names → operator kwargs
@@ -482,22 +483,36 @@ _AGGREGATOR_ADAPTERS: dict[str, Callable[[dict], dict]] = {
 }
 
 
+def _load(config: str | dict[str, Any]) -> dict[str, Any]:
+    """A config as its parsed mapping: YAML text goes through safe_load."""
+    if isinstance(config, str):
+        import yaml
+
+        config = yaml.safe_load(config)
+    if not isinstance(config, dict):
+        raise ValueError(f"a config is a YAML mapping, not {type(config).__name__}")
+    return config
+
+
 def compile_ilogtail_config(config: str | dict[str, Any]) -> dict[str, Any]:
     """YAML text (or parsed dict) → internal pipeline spec for
-    `build_pipeline`. Raises KeyError naming any plugin Type this engine
-    doesn't implement (SURVEY §2's descoped rows raise here too) — for
-    processors AND aggregators.
+    `build_pipeline` / `run_pipeline` / `run_stream_pipeline`; the only
+    YAML-specific step of a run. Raises KeyError naming any plugin Type
+    this engine doesn't implement (SURVEY §2's descoped rows raise here
+    too) — for processors AND aggregators.
 
     `aggregator_logstore_router` compiles into the spec's `router`
     (first-match exclusive, aggregator_router.go:97-168); the other
     aggregators land in `aggregators` for `aggregates_for`. A PackFlag /
     EnablePackID on any aggregator turns on `lineage` (the __pack_id__
-    stamp, aggregator_base.go:140-147)."""
-    if isinstance(config, str):
-        import yaml
+    stamp, aggregator_base.go:140-147).
 
-        config = yaml.safe_load(config)
-    assert isinstance(config, dict)
+    Each flusher becomes a copy condition named `flusher_<i>_<Type>`:
+    its `Match` (`{Type: tag, Key: k, Value: v}`, Condition.cpp:105), or
+    every row without one (Router.cpp:26-49). The reference aggregates
+    before that fan-out, this engine after it, so flushers plus any
+    aggregator but the logstore router raise ValueError."""
+    config = _load(config)
     if config.get("enable") is False:
         raise ValueError("config has enable: false")
     processors = []
@@ -507,9 +522,18 @@ def compile_ilogtail_config(config: str | dict[str, Any]) -> dict[str, Any]:
         if fn is None:
             raise KeyError(f"unsupported processor plugin: {typ!r}")
         processors.append(fn(p))
+    flushers = []
+    for i, fl in enumerate(config.get("flushers", []) or []):
+        flusher = {"sink": f"flusher_{i}_{fl.get('Type', 'sink')}"}
+        m = fl.get("Match")
+        if m is not None:
+            if m.get("Type", "tag") != "tag":
+                raise KeyError(f"unsupported flusher Match.Type: {m.get('Type')!r}")
+            flusher |= {"key": m["Key"], "value": m["Value"]}
+        flushers.append(flusher)
     spec: dict[str, Any] = {
         "processors": processors,
-        "flushers": list(config.get("flushers", []) or []),
+        "flushers": flushers,
         "aggregators": [],
     }
     for a in config.get("aggregators", []) or []:
@@ -536,6 +560,11 @@ def compile_ilogtail_config(config: str | dict[str, Any]) -> dict[str, Any]:
             fn_a = _AGGREGATOR_ADAPTERS.get(typ)
             if fn_a is None:
                 raise KeyError(f"unsupported aggregator plugin: {typ!r}")
+            if flushers:
+                raise ValueError(
+                    f"{typ} with flushers: the reference aggregates before the "
+                    "flusher fan-out, this engine after it"
+                )
             spec["aggregators"].append(fn_a(a))
         if a.get("PackFlag") or a.get("EnablePackID"):
             spec["lineage"] = a.get("Topic") or "config"
@@ -563,25 +592,17 @@ def read_inputs(spark: SparkSession, config: str | dict[str, Any]) -> DataFrame:
     id orders lines within each source exactly like the reference's byte
     offsets. Only ORDER is promised, not density.
 
+    SQL-query inputs (`service_mysql`, …) read tables, and each read
+    advances their checkpoint (sources/sqlquery.py).
+
     Multiple inputs union by column name (missing columns NULL-fill);
     mixing decoder types whose shared column names carry different
     Spark types (e.g. statsd's double `__value__` with influx's string
     `__value__`) fails loudly at plan time — split such pipelines into
     one config per protocol, as the reference deployments do."""
-    if isinstance(config, str):
-        import yaml
+    from ilogtail_spark.sources.sqlquery import SqlQueryInput
 
-        config = yaml.safe_load(config)
-    inputs = config.get("inputs", []) or []
-    if not inputs:
-        raise ValueError("no inputs in config")
-    from pyspark.sql import functions as F
-
-    def _lines(i: dict) -> DataFrame:
-        paths = i.get("FilePaths", [])
-        if not paths:
-            raise ValueError(f"{i.get('Type')}: FilePaths required "
-                             "(offline frame archive)")
+    def lines(paths: list[str]) -> DataFrame:
         return (
             spark.read.text(paths)
             .withColumnRenamed("value", "content")
@@ -589,35 +610,90 @@ def read_inputs(spark: SparkSession, config: str | dict[str, Any]) -> DataFrame:
             .withColumn("__offset__", F.monotonically_increasing_id())
         )
 
-    dfs = []
-    for i in inputs:
-        _validate_input(i)  # unknown Type/Format fails before any read
-        if i.get("Type") in _SQL_INPUTS:
-            # incremental SQL-query inputs read TABLES, not frame lines
-            from ilogtail_spark.sources.sqlquery import SqlQueryInput
+    def sql(i: dict) -> DataFrame:
+        return SqlQueryInput(
+            spark,
+            i["StateMent"],
+            tables=i["Tables"],
+            ckpt_path=i["CheckPointPath"],
+            instance=i.get("Instance", i["Type"]),
+            checkpoint=i.get("CheckPoint", False),
+            checkpoint_column=i.get("CheckPointColumn"),
+            checkpoint_column_type=i.get("CheckPointColumnType", "string"),
+            checkpoint_start=i.get("CheckPointStart", ""),
+            max_sync_size=i.get("MaxSyncSize", 0),
+        ).collect()
 
-            dfs.append(
-                SqlQueryInput(
-                    spark,
-                    i["StateMent"],
-                    tables=i["Tables"],
-                    ckpt_path=i["CheckPointPath"],
-                    instance=i.get("Instance", i["Type"]),
-                    checkpoint=i.get("CheckPoint", False),
-                    checkpoint_column=i.get("CheckPointColumn"),
-                    checkpoint_column_type=i.get(
-                        "CheckPointColumnType", "string"
-                    ),
-                    checkpoint_start=i.get("CheckPointStart", ""),
-                    max_sync_size=i.get("MaxSyncSize", 0),
-                ).collect()
-            )
-            continue
-        dfs.append(_decode_input(_lines(i), i))
-    df = dfs[0]
+    return _union_inputs(config, lines, sql)
+
+
+def read_inputs_stream(
+    spark: SparkSession,
+    config: str | dict[str, Any],
+) -> DataFrame:
+    """Streaming twin of :func:`read_inputs`: the reference agent TAILS
+    its input files continuously — the Structured Streaming file source
+    is the cluster equivalent (new files under the watched paths become
+    micro-batches; checkpointed offsets are the reference's read-offset
+    checkpoint, pluginmanager/checkpoint_manager.go:40-52).
+    Each watched path reads at most one wave of max-size splits per
+    trigger (streaming/stream.py::max_bytes_per_trigger), the analog of
+    the reference's bounded process queues: a backlog of small files is
+    one micro-batch, a backlog of huge ones is cut into waves.
+    `__source__` rides along; there is no `__offset__` on this path —
+    order-dependent processors (multiline) need the stateful streaming
+    operator instead. Network-input decoders are stateless projections,
+    so they apply to the micro-batch stream exactly as they do in batch;
+    SQL-query inputs raise."""
+    from ilogtail_spark.streaming.stream import max_bytes_per_trigger
+
+    max_bytes = max_bytes_per_trigger(spark)
+
+    def lines(paths: list[str]) -> DataFrame:
+        streams = [
+            spark.readStream.option("maxBytesPerTrigger", max_bytes).text(p)
+            for p in paths
+        ]
+        s = streams[0]
+        for extra in streams[1:]:
+            s = s.unionByName(extra)
+        return (
+            s.withColumnRenamed("value", "content")
+            .withColumn("__source__", F.input_file_name())
+        )
+
+    def sql(i: dict) -> DataFrame:
+        raise ValueError(
+            f"{i.get('Type')}: batch-only — the reference polls on "
+            "an interval, which here is the batch runner re-invoked "
+            "per cycle (each read_inputs call = one Collect); the "
+            "file-stream source cannot carry the checkpoint bind"
+        )
+
+    return _union_inputs(config, lines, sql)
+
+
+def _union_inputs(
+    config: str | dict[str, Any],
+    lines: Callable[[list[str]], DataFrame],
+    sql: Callable[[dict], DataFrame],
+) -> DataFrame:
+    """The input section both readers share: every input is checked
+    before any is read, then each becomes `sql(input)` (SQL-query inputs)
+    or its decoder over `lines(FilePaths)`, unioned by column name."""
+    inputs = _load(config).get("inputs", []) or []
+    if not inputs:
+        raise ValueError("no inputs in config")
+    for i in inputs:
+        _validate_input(i)
+    dfs = [
+        sql(i) if i["Type"] in _SQL_INPUTS else _decode_input(lines(i["FilePaths"]), i)
+        for i in inputs
+    ]
+    out = dfs[0]
     for d in dfs[1:]:
-        df = df.unionByName(d, allowMissingColumns=True)
-    return df
+        out = out.unionByName(d, allowMissingColumns=True)
+    return out
 
 
 _HTTP_FORMATS = ("influx", "influxdb", "statsd", "otlp_logv1")
@@ -626,12 +702,12 @@ _HTTP_FORMATS = ("influx", "influxdb", "statsd", "otlp_logv1")
 # pgsql,mssql} differ only in driver/DSN — transport)
 _SQL_INPUTS = ("service_mysql", "service_pgsql", "service_mssql")
 
+_FILE_INPUTS = ("input_file", "file_log", "service_syslog", "service_otlp",
+                "input_container_stdio", "service_http_server")
+
 
 def _validate_input(i: dict) -> None:
     typ = i.get("Type")
-    if typ in ("input_file", "file_log", "service_syslog", "service_otlp",
-               "input_container_stdio"):
-        return
     if typ in _SQL_INPUTS:
         if not i.get("StateMent"):
             raise ValueError(f"{typ}: StateMent required")  # mysql.go:101
@@ -643,13 +719,14 @@ def _validate_input(i: dict) -> None:
         if not i.get("CheckPointPath"):
             raise ValueError(f"{typ}: CheckPointPath required")
         return
-    if typ == "service_http_server":
-        if i.get("Format") not in _HTTP_FORMATS:
-            raise KeyError(
-                f"unsupported service_http_server Format: {i.get('Format')!r}"
-            )
-        return
-    raise KeyError(f"unsupported input plugin: {typ!r}")
+    if typ not in _FILE_INPUTS:
+        raise KeyError(f"unsupported input plugin: {typ!r}")
+    if typ == "service_http_server" and i.get("Format") not in _HTTP_FORMATS:
+        raise KeyError(
+            f"unsupported service_http_server Format: {i.get('Format')!r}"
+        )
+    if not i.get("FilePaths"):
+        raise ValueError(f"{typ}: FilePaths required (offline frame archive)")
 
 
 def _decode_input(df: DataFrame, i: dict) -> DataFrame:
@@ -657,8 +734,6 @@ def _decode_input(df: DataFrame, i: dict) -> DataFrame:
     Every decoder is a stateless projection (operators/netparse.py), so
     this works identically on a batch or a streaming DataFrame —
     read_inputs and read_inputs_stream share it."""
-    from pyspark.sql import functions as F
-
     typ = i.get("Type")
     if typ in ("input_file", "file_log"):
         return df
@@ -733,11 +808,9 @@ def _decode_input(df: DataFrame, i: dict) -> DataFrame:
             from ilogtail_spark.operators.netparse import statsd_decode
 
             return statsd_decode(df, "content", time_col=None)
-        if fmt == "otlp_logv1":
-            from ilogtail_spark.operators.netparse import otlp_log_decode
+        from ilogtail_spark.operators.netparse import otlp_log_decode
 
-            return otlp_log_decode(df, "content")
-        raise KeyError(f"unsupported service_http_server Format: {fmt!r}")
+        return otlp_log_decode(df, "content")
     raise KeyError(f"unsupported input plugin: {typ!r}")
 
 
@@ -745,200 +818,66 @@ def run_ilogtail_config(
     spark: SparkSession,
     config: str | dict[str, Any],
     *,
+    out_dir: str,
+    run_id: str = "run-0",
     df: DataFrame | None = None,
-    out_dir: str | None = None,
-) -> DataFrame:
-    """End-to-end: inputs (or a supplied df) → processors → router →
-    flushers. Returns the processed (and, when the config routes, routed)
-    DataFrame — lazy — so callers can also aggregate it.
+) -> dict[str, int]:
+    """Batch run of a YAML config: compile, then
+    `plans/pipeline.py::run_pipeline` over its inputs (or a supplied
+    `df`); returns the per-flusher row counts. Every flusher's rows come
+    out of one fan-out and ONE routed write, parquet under
+    `out_dir/routed/route=flusher_<i>_<Type>/`, with `sink_counts` and a
+    checkpoint commit of the counts. A logstore router's route is kept as
+    `__logstore__`. A config without flushers raises ValueError.
 
-    With `out_dir`, the flushers receive the rows through
-    :func:`_fan_out` and ONE `write_routed` job: parquet under
-    `out_dir/routed/route=<flusher>/`, one subdir per flusher named
-    `flusher_<i>_<Type>`. The copies come out of one codegen'd Generate,
-    so the processors upstream run once per input row whatever the
-    number of flushers. A config without flushers raises ValueError.
+    A committed `run_id` returns its committed counts and writes nothing;
+    its inputs are not read, so an SQL-query input's checkpoint does not
+    move."""
+    from ilogtail_spark.plans.pipeline import run_pipeline
 
-    An `aggregator_logstore_router` in the config routes rows BEFORE
-    flushers (exclusive first-match `route` column, which the written
-    rows carry as `__logstore__`), matching the reference's
-    aggregator→flusher order."""
-    from ilogtail_spark.operators.route import write_routed
-    from ilogtail_spark.plans.pipeline import apply_processors, apply_router
-
-    if isinstance(config, str):
-        import yaml
-
-        config = yaml.safe_load(config)
-    spec = compile_ilogtail_config(config)
-    conds = _flusher_conditions(spec["flushers"]) if out_dir else None
-    src = df if df is not None else read_inputs(spark, config)
-    out = apply_processors(src, spec["processors"])
-    if spec.get("router"):
-        out = apply_router(out, spec["router"])
-    if out_dir:
-        write_routed(_fan_out(out, conds), f"{out_dir}/routed")
-    return out
-
-
-def _flusher_conditions(flushers: list[dict]) -> list:
-    """Flusher list → route_copy conditions, one per flusher, named
-    `flusher_<i>_<Type>`. The C++ Router (Router.cpp:26-49 +
-    Condition.cpp:55,105) sends a group to every flusher whose `Match`
-    (`{Type: tag, Key: k, Value: v}`) it meets; a flusher without `Match`
-    receives every group. Shared by the batch and streaming runners; an
-    empty `flushers` section raises, since nothing would be written."""
-    from ilogtail_spark.operators.route import CopyCondition
-
-    if not flushers:
-        raise ValueError("config has an empty flushers section: nothing to write to")
-    conds = []
-    for i, fl in enumerate(flushers):
-        name = f"flusher_{i}_{fl.get('Type', 'sink')}"
-        m = fl.get("Match")
-        if m is None:
-            conds.append(CopyCondition(sink=name))
-        elif m.get("Type", "tag") == "tag":
-            conds.append(CopyCondition(sink=name, key=m["Key"], value=m["Value"]))
-        else:
-            raise KeyError(f"unsupported flusher Match.Type: {m.get('Type')!r}")
-    return conds
-
-
-def _fan_out(df: DataFrame, conds: list) -> DataFrame:
-    """The flusher fan-out both YAML runners write: one copy of each row
-    per flusher that receives it, the flusher name in `route`. Flusher
-    records don't carry the read-context metadata columns (the reference
-    only emits file/offset with EnableLogPositionMeta). A logstore
-    router's `route` moves to `__logstore__`, the column the
-    opentelemetry and skywalking routers fill, so it survives."""
-    from ilogtail_spark.operators.route import route_copy
-
-    df = df.drop("__source__", "__offset__")
-    if "route" in df.columns:
-        df = df.withColumnRenamed("route", "__logstore__")
-    return route_copy(df, conds)
-
-
-def read_inputs_stream(
-    spark: SparkSession,
-    config: str | dict[str, Any],
-) -> DataFrame:
-    """Streaming twin of :func:`read_inputs`: the reference agent TAILS
-    its input files continuously — the Structured Streaming file source
-    is the cluster equivalent (new files under the watched paths become
-    micro-batches; checkpointed offsets are the reference's read-offset
-    checkpoint, pluginmanager/checkpoint_manager.go:40-52).
-    Each watched path reads at most one wave of max-size splits per
-    trigger (streaming/stream.py::max_bytes_per_trigger), the analog of
-    the reference's bounded process queues: a backlog of small files is
-    one micro-batch, a backlog of huge ones is cut into waves.
-    `__source__` rides along; there is no `__offset__` on this path —
-    order-dependent processors (multiline) need the stateful streaming
-    operator instead."""
-    if isinstance(config, str):
-        import yaml
-
-        config = yaml.safe_load(config)
-    inputs = config.get("inputs", []) or []
-    if not inputs:
-        raise ValueError("no inputs in config")
-    from pyspark.sql import functions as F
-
-    from ilogtail_spark.streaming.stream import max_bytes_per_trigger
-
-    max_bytes = max_bytes_per_trigger(spark)
-
-    def _stream_lines(i: dict) -> DataFrame:
-        paths = i.get("FilePaths", [])
-        if not paths:
-            raise ValueError(f"{i.get('Type')}: FilePaths required "
-                             "(offline frame archive)")
-        streams = [
-            spark.readStream.option("maxBytesPerTrigger", max_bytes).text(p)
-            for p in paths
-        ]
-        s = streams[0]
-        for extra in streams[1:]:
-            s = s.unionByName(extra)
-        return (
-            s.withColumnRenamed("value", "content")
-            .withColumn("__source__", F.input_file_name())
-        )
-
-    # network-input decoders are stateless projections, so they apply
-    # to the micro-batch stream exactly as they do in batch
-    dfs = []
-    for i in inputs:
-        _validate_input(i)
-        if i.get("Type") in _SQL_INPUTS:
-            raise ValueError(
-                f"{i.get('Type')}: batch-only — the reference polls on "
-                "an interval, which here is the batch runner re-invoked "
-                "per cycle (each read_inputs call = one Collect); the "
-                "file-stream source cannot carry the checkpoint bind"
-            )
-        dfs.append(_decode_input(_stream_lines(i), i))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d, allowMissingColumns=True)
-    return out
+    config = _load(config)
+    spec = _flushed_spec(config)
+    src = df if df is not None else (lambda: read_inputs(spark, config))
+    return run_pipeline(spark, src, spec, out_dir, run_id=run_id)
 
 
 def run_ilogtail_config_stream(
     spark: SparkSession,
     config: str | dict[str, Any],
     *,
-    df: DataFrame | None = None,
     out_dir: str,
     timeout_sec: float = 120,
 ) -> None:
-    """Streaming end-to-end for the SAME YAML file the batch runner
-    takes — the reference agent is a continuously-running process, so a
-    config must also compile to a Structured Streaming query. Stateless
-    processors and the router apply 1:1 on the stream; each micro-batch
-    goes through the batch runner's flusher fan-out (:func:`_fan_out`)
-    and one `write_routed` job under
-    `out_dir/routed/batch_id=<n>/route=<flusher>/`. A retried
-    micro-batch overwrites only its own batch, so checkpointed offsets +
-    idempotent writes give exactly-once delivery across restarts (the
-    reference's pack-id send dedup). A config without flushers raises
-    ValueError.
+    """Streaming run of the SAME YAML file — the reference agent is a
+    continuously-running process: compile, then
+    `streaming/stream.py::run_stream_pipeline` over
+    :func:`read_inputs_stream`. Rows land under
+    `out_dir/routed/batch_id=<n>/route=<flusher>/`; checkpointed offsets
+    plus that idempotent write are exactly-once across restarts, and a
+    rerun drains only new input. A config without flushers raises
+    ValueError, a drain past `timeout_sec` TimeoutError.
 
     Order-dependent processors (multiline merge) raise here: on a
     stream they need the cross-batch stateful operator
-    (streaming/stateful.py::stream_merge_multiline), not a window.
+    (streaming/stateful.py::stream_merge_multiline), not a window."""
+    from ilogtail_spark.streaming.stream import run_stream_pipeline
 
-    Drains the input available at start through
-    `streaming/stream.py::drain` and returns; a drain still running
-    after `timeout_sec` is stopped and raises TimeoutError. Each
-    micro-batch holds at most one wave of max-size splits
-    (:func:`read_inputs_stream`), so a backlog that fits in one wave is
-    one batch: one routed write and one offset commit."""
-    from ilogtail_spark.operators.route import write_routed
-    from ilogtail_spark.plans.pipeline import apply_processors, apply_router
-    from ilogtail_spark.streaming.stream import drain
-
-    if isinstance(config, str):
-        import yaml
-
-        config = yaml.safe_load(config)
-    spec = compile_ilogtail_config(config)
-    for p in spec["processors"]:
-        if p["type"] == "multiline_merge":
-            raise ValueError(
-                "processor_split_log_regex on the streaming path needs the "
-                "stateful operator (streaming/stateful.py::"
-                "stream_merge_multiline), not the batch window form"
-            )
-    conds = _flusher_conditions(spec["flushers"])
-    src = df if df is not None else read_inputs_stream(spark, config)
-    out = apply_processors(src, spec["processors"])
-    if spec.get("router"):
-        out = apply_router(out, spec["router"])
-    drain(
-        out,
-        lambda b, i: write_routed(_fan_out(b, conds), f"{out_dir}/routed", batch_id=i),
-        out_dir,
-        timeout_sec,
+    config = _load(config)
+    spec = _flushed_spec(config)
+    if any(p["type"] == "multiline_merge" for p in spec["processors"]):
+        raise ValueError(
+            "processor_split_log_regex on the streaming path needs the "
+            "stateful operator (streaming/stateful.py::"
+            "stream_merge_multiline), not the batch window form"
+        )
+    run_stream_pipeline(
+        spark, read_inputs_stream(spark, config), spec, out_dir, timeout_sec=timeout_sec
     )
+
+
+def _flushed_spec(config: dict[str, Any]) -> dict[str, Any]:
+    """The spec of a config a runner writes: one with flushers."""
+    spec = compile_ilogtail_config(config)
+    if not spec["flushers"]:
+        raise ValueError("config has an empty flushers section: nothing to write to")
+    return spec

@@ -19,6 +19,9 @@ Spec shape (mirrors the reference YAML field names where sensible):
       "router": {"mode": "exclusive", "rules": [[key, regex, sink], ...],
                  "default": "sink_default", "drop_dismatch": false},
       "aggregators": [{"type": "content_value_group", "keys": [...]}],
+      "lineage": "config-name",
+      "flushers": [{"sink": "flusher_0_flusher_sls", "key": "level",
+                    "value": "ERROR"}, {"sink": "flusher_1_flusher_file"}],
     }
 
 All stage handlers are thin wrappers over ilogtail_spark.operators.* —
@@ -169,12 +172,45 @@ def apply_router(df: DataFrame, router: dict[str, Any] | None) -> DataFrame:
 
 
 def build_pipeline(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
-    """Compile + apply: returns the routed row-level DataFrame (lazy)."""
+    """Compile + apply processors → router → lineage → flusher fan-out,
+    the reference's order. Returns the routed row-level DataFrame (lazy,
+    batch or stream); `route` is one of :func:`spec_routes`, the flusher
+    name when the spec has flushers (then only a router adds a route)."""
     out = apply_processors(df, spec.get("processors", []))
-    out = apply_router(out, spec.get("router"))
+    flushers = spec.get("flushers")
+    if spec.get("router") or not flushers:
+        out = apply_router(out, spec.get("router"))
     if spec.get("lineage"):
         out = agg_ops.add_lineage(out, spec["lineage"])
+    if flushers:
+        out = _fan_out(out, flushers)
     return out
+
+
+def _fan_out(df: DataFrame, flushers: list[dict[str, str]]) -> DataFrame:
+    """One copy of each row per flusher whose condition it meets
+    (Router.cpp:26-49), the flusher name in `route`. Flusher records
+    don't carry the read-context columns (the reference only emits
+    file/offset with EnableLogPositionMeta). A router's `route` moves to
+    `__logstore__`, the column the otel and skywalking routers fill."""
+    df = df.drop("__source__", "__offset__")
+    if "route" in df.columns:
+        df = df.withColumnRenamed("route", "__logstore__")
+    return route_copy(df, [CopyCondition(**f) for f in flushers])
+
+
+def spec_routes(spec: dict[str, Any]) -> list[str]:
+    """Every route `build_pipeline(df, spec)` can give a row: the flusher
+    names when the spec has flushers; otherwise the router's rule sinks,
+    plus its default unless `drop_dismatch` (copy mode has none), and
+    `sink_default` without a router."""
+    if spec.get("flushers"):
+        return [f["sink"] for f in spec["flushers"]]
+    router = spec.get("router") or {}
+    routes = [s for (_, _, s) in router.get("rules", [])]
+    if router.get("mode") != "copy" and not (routes and router.get("drop_dismatch")):
+        routes.append(router.get("default", "sink_default"))
+    return list(dict.fromkeys(routes))
 
 
 def aggregates_for(df_routed: DataFrame, spec: dict[str, Any]) -> dict[str, DataFrame]:
@@ -256,7 +292,7 @@ def aggregates_for(df_routed: DataFrame, spec: dict[str, Any]) -> dict[str, Data
 
 def run_pipeline(
     spark: SparkSession,
-    df: DataFrame,
+    df: DataFrame | Callable[[], DataFrame],
     spec: dict[str, Any],
     out_dir: str,
     *,
@@ -264,19 +300,23 @@ def run_pipeline(
     shard_keys: list[str] | None = None,
     shard_count: int = 32,
 ) -> dict[str, int]:
-    """Execute: route → (optional shard repartition) → one partitioned
+    """The batch runner of every spec, a compiled YAML config's too:
+    build_pipeline → (optional shard repartition) → one partitioned
     multi-sink write → aggregate tables → one checkpoint commit.
 
-    Returns per-sink row counts. Like the reference, which flushes each
+    Returns per-route row counts. Like the reference, which flushes each
     batch once and keeps its counters in memory (Pipeline.h:110-117), the
-    sinks are ONE `write_routed` job — the sink every runner writes
-    through, parquet under `out_dir/routed/route=<sink>/` (sharded
-    pre-write when `shard_keys` is given) — that carries rows in and
-    per-route counts as Observations;
-    `sink_counts` is written from them, the other aggregators from a
-    schema-given re-read of `routed/`, and the commit payload holds
-    `counts`, `rows_in` and `rows_out`. A committed `run_id` returns its
-    committed counts and writes nothing.
+    sinks are ONE `write_routed` job — parquet under
+    `out_dir/routed/route=<route>/` (sharded pre-write when `shard_keys`
+    is given) — that carries rows in and per-route counts as
+    Observations; `sink_counts` is written from them, the other
+    aggregators from a schema-given re-read of `routed/`, and the commit
+    payload holds `counts`, `rows_in` and `rows_out`.
+
+    A committed `run_id` returns its committed counts and writes nothing.
+    `df` may be a function returning the input, called only when the run
+    has not committed: a source that consumes its input when read
+    (sources/sqlquery.py) is then not read by a committed re-run.
     """
     from pyspark.sql import Observation
 
@@ -290,18 +330,14 @@ def run_pipeline(
     if done is not None:
         # older commits carried the bare route → count dict
         return done["counts"] if isinstance(done.get("counts"), dict) else done
+    if callable(df):
+        df = df()
 
     obs_in, obs_out = Observation(), Observation()
     routed = build_pipeline(df.observe(obs_in, F.count(F.lit(1)).alias("n")), spec)
     if shard_keys:
         routed = agg_ops.shard_hash(routed, shard_keys, shard_count, repartition=True)
-    # every route apply_router can give a row: the rule sinks, plus the
-    # default unless drop_dismatch (copy mode has none)
-    router = spec.get("router") or {}
-    routes = [s for (_, _, s) in router.get("rules", [])]
-    if router.get("mode") != "copy" and not (routes and router.get("drop_dismatch")):
-        routes.append(router.get("default", "sink_default"))
-    per_route = [F.count_if(F.col("route") == r).alias(r) for r in dict.fromkeys(routes)]
+    per_route = [F.count_if(F.col("route") == r).alias(r) for r in spec_routes(spec)]
     write_routed(routed.observe(obs_out, *per_route), f"{out_dir}/routed")
     counts = {r: n for r, n in obs_out.get.items() if n}
 

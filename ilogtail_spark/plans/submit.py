@@ -54,9 +54,9 @@ def main(argv: list[str] | None = None) -> None:
     spark = get_spark(app_name=f"ilogtail_spark:{args.run_id}", master=args.master)
 
     if args.streaming:
-        from ilogtail_spark.streaming.stream import run_stream_pipeline
+        from ilogtail_spark.streaming.stream import run_stream_pipeline, stream_transcripts
 
-        run_stream_pipeline(spark, args.input, args.out, spec)
+        run_stream_pipeline(spark, stream_transcripts(spark, args.input), spec, args.out)
         print(json.dumps({"run_id": args.run_id, "mode": "streaming", "out": args.out}))
     else:
         df = spark.read.parquet(args.input)

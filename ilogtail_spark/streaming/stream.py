@@ -83,13 +83,11 @@ def windowed_route_counts(
     finalize (and emit, in append mode) once the watermark passes their
     end. State is bounded by (routes × open windows).
     """
-    from ilogtail_spark.plans.pipeline import apply_processors, apply_router
+    from ilogtail_spark.plans.pipeline import build_pipeline
 
-    routed = apply_router(
-        apply_processors(stream, spec.get("processors", [])), spec.get("router")
-    )
     return (
-        routed.withWatermark("ts", watermark)
+        build_pipeline(stream, spec)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window_duration).alias("win"), F.col("route"))
         .agg(F.count(F.lit(1)).alias("log_count"))
         .select(
@@ -129,23 +127,26 @@ def drain(
 
 def run_stream_pipeline(
     spark: SparkSession,
-    in_path: str,
-    out_dir: str,
+    stream: DataFrame,
     spec: dict[str, Any],
+    out_dir: str,
     *,
     timeout_sec: float = 120,
 ) -> None:
-    """Stream → build_pipeline (same spec as batch) → :func:`drain`, each
-    micro-batch written by `write_routed` under
-    `out_dir/routed/batch_id=<n>/route=<sink>/`. Returns once the input
-    available at start is drained; raises TimeoutError after
-    `timeout_sec`."""
+    """The stream runner of every spec, a compiled YAML config's too
+    (plans/config.py::run_ilogtail_config_stream): `build_pipeline`
+    applied to the streaming DataFrame `stream` (e.g.
+    :func:`stream_transcripts`), then :func:`drain`, each micro-batch
+    written by `write_routed` under
+    `out_dir/routed/batch_id=<n>/route=<route>/`. Returns once the input
+    available at start is drained; a rerun drains only input that arrived
+    since. Raises TimeoutError after `timeout_sec`."""
     from ilogtail_spark.operators.route import write_routed
     from ilogtail_spark.plans.pipeline import build_pipeline
 
     drain(
-        stream_transcripts(spark, in_path),
-        lambda b, i: write_routed(build_pipeline(b, spec), f"{out_dir}/routed", batch_id=i),
+        build_pipeline(stream, spec),
+        lambda b, i: write_routed(b, f"{out_dir}/routed", batch_id=i),
         out_dir,
         timeout_sec,
     )

@@ -15,6 +15,7 @@ from ilogtail_spark.plans.config import (
     read_inputs,
     run_ilogtail_config,
 )
+from ilogtail_spark.plans.pipeline import build_pipeline
 
 NGINX_YAML = """
 enable: true
@@ -64,23 +65,25 @@ class TestYamlConfig:
     def test_end_to_end(self, spark, tmp_path):
         yaml_text = NGINX_YAML.format(log_path=self._write_log(tmp_path))
         out_dir = str(tmp_path / "sinks")
-        df = run_ilogtail_config(spark, yaml_text, out_dir=out_dir)
-        rows = {r["remote_addr"]: r for r in df.collect()}
-        assert rows["10.0.0.1"]["method"] == "GET"
-        assert rows["10.0.0.1"]["method_class"] == "read"
-        assert rows["10.0.0.2"]["status"] == "500"
-        assert rows["10.0.0.2"]["method_class"] == "write"
+        counts = run_ilogtail_config(spark, yaml_text, out_dir=out_dir)
+        assert counts == {"flusher_0_flusher_stdout": 2}
         # the flusher's rows are parquet under routed/route=<flusher>
         recs = spark.read.parquet(
             os.path.join(out_dir, "routed", "route=flusher_0_flusher_stdout")
         ).collect()
-        assert {r["remote_addr"] for r in recs} == {"10.0.0.1", "10.0.0.2"}
+        rows = {r["remote_addr"]: r for r in recs}
+        assert set(rows) == {"10.0.0.1", "10.0.0.2"}
+        assert rows["10.0.0.1"]["method"] == "GET"
+        assert rows["10.0.0.1"]["method_class"] == "read"
+        assert rows["10.0.0.2"]["status"] == "500"
+        assert rows["10.0.0.2"]["method_class"] == "write"
 
     def test_source_kept_on_parse_error_default(self, spark, tmp_path):
         p = tmp_path / "bad.log"
         p.write_text("not an access line\n")
         yaml_text = NGINX_YAML.format(log_path=str(p))
-        row = run_ilogtail_config(spark, yaml_text).first()
+        row = build_pipeline(read_inputs(spark, yaml_text),
+                             compile_ilogtail_config(yaml_text)).first()
         # regex.go keep-source-on-error default: raw content survives
         assert row["content"] == "not an access line"
         assert row["remote_addr"] is None
@@ -109,7 +112,7 @@ class TestYamlConfig:
 
 def _run(spark, cfg, df):
     """Compile + execute a config over a supplied DataFrame."""
-    return run_ilogtail_config(spark, cfg, df=df)
+    return build_pipeline(df, compile_ilogtail_config(cfg))
 
 
 class TestAdapterProcessors:
@@ -191,7 +194,7 @@ class TestAdapterProcessors:
                 "SplitRegex": r"\d{4}-\d{2}-\d{2}.*",
             }],
         }
-        out = run_ilogtail_config(spark, cfg)
+        out = build_pipeline(read_inputs(spark, cfg), compile_ilogtail_config(cfg))
         recs = sorted(r["content"] for r in out.collect())
         assert recs == ["2024-01-01 ERROR boom\n  at a.b\n  at c.d", "2024-01-01 INFO ok"]
 
@@ -685,7 +688,7 @@ class TestSplProcessor:
                        "as method, url, status | where status = '500'"),
             "TimeoutMilliSeconds": 1000,
         }]}
-        rows = run_ilogtail_config(spark, cfg, df=df).collect()
+        rows = build_pipeline(df, compile_ilogtail_config(cfg)).collect()
         assert len(rows) == 1
         assert rows[0]["method"] == "POST" and rows[0]["url"] == "/b"
 
@@ -731,7 +734,7 @@ class TestNetworkInputReplay:
                             "SourceKey": "content", "Delimiter": " ",
                             "Separator": "=", "Keys": ["code", "msg"]}],
         }
-        row = run_ilogtail_config(spark, cfg, df=read_inputs(spark, cfg)).collect()[0]
+        row = build_pipeline(read_inputs(spark, cfg), compile_ilogtail_config(cfg)).collect()[0]
         assert row["code"] == "42" and row["msg"] == "ok"
 
     def test_http_server_influx(self, spark, tmp_path):
@@ -893,24 +896,84 @@ class TestOneSinkLayout:
         assert sum(batch.values()) == len(self.ROUTER_WANT)
         assert batch == pairs(stream_dir)
 
-    def test_unmatched_flushers_one_write_job(self, spark, tmp_path):
-        """Three flushers without Match are one routed write job, and
-        every input row lands once under each flusher."""
+    def test_unmatched_flushers_one_write_job(self, spark, tmp_path, monkeypatch):
+        """The fan-out is one write: exactly one job writes routed/, a
+        run with three flushers without Match starts as many jobs as a
+        run with one, and every input row lands once under each flusher."""
         from test_pipeline_e2e import _job_ids
 
+        from ilogtail_spark.operators import route
+
         df = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], "content string")
-        cfg = {"processors": [], "flushers": [
-            {"Type": "flusher_sls"}, {"Type": "flusher_kafka"}, {"Type": "flusher_file"}]}
+        types = ["flusher_sls", "flusher_kafka", "flusher_file"]
+
+        def run(n_flushers, out_dir):
+            cfg = {"processors": [], "flushers": [{"Type": t} for t in types[:n_flushers]]}
+            return _job_ids(spark, lambda: run_ilogtail_config(spark, cfg, df=df, out_dir=out_dir))
+
+        assert run(3, str(tmp_path / "three")) == run(1, str(tmp_path / "one"))
+        write, writes = route.write_routed, []
+        monkeypatch.setattr(route, "write_routed", lambda *a, **kw: writes.append(
+            _job_ids(spark, lambda: write(*a, **kw))))
         out_dir = str(tmp_path / "sinks")
-        n = _job_ids(spark, lambda: run_ilogtail_config(spark, cfg, df=df, out_dir=out_dir))
-        assert n == 1
+        run(3, out_dir)
+        assert writes == [1]
         routed = spark.read.parquet(f"{out_dir}/routed")
+        # no router: no __logstore__ column
+        assert sorted(routed.columns) == ["content", "route"]
         got = sorted((r["route"], r["content"]) for r in routed.collect())
         assert got == sorted(
             (f"flusher_{i}_{t}", c)
             for i, t in enumerate(["flusher_sls", "flusher_kafka", "flusher_file"])
             for c in "abcd"
         )
+
+    def test_commit_counts_match_written_rows(self, spark, tmp_path):
+        """A YAML batch run commits its counts like every run_pipeline
+        run: the payload, the returned counts, the sink_counts table and
+        groupBy(route) over routed/ agree."""
+        import pyspark.sql.functions as F
+
+        from ilogtail_spark.plans.checkpoint import CheckpointTable
+
+        out_dir = str(tmp_path / "sinks")
+        counts = run_ilogtail_config(spark, self._router_cfg(tmp_path), out_dir=out_dir,
+                                     run_id="c1")
+        payload = CheckpointTable(spark, f"{out_dir}/_checkpoint").payload("c1", "route_write")
+        grouped = spark.read.parquet(f"{out_dir}/routed").groupBy("route").agg(
+            F.count(F.lit(1)).alias("n"))
+        table = spark.read.parquet(f"{out_dir}/sink_counts")
+        assert payload == {"counts": counts, "rows_in": 3, "rows_out": len(self.ROUTER_WANT)}
+        assert counts == {r["route"]: r["n"] for r in grouped.collect()}
+        assert counts == {r["route"]: r["log_count"] for r in table.collect()}
+        assert counts == {"flusher_0_flusher_sls": 2, "flusher_1_flusher_file": 3}
+
+    def test_pack_flag_lineage_written(self, spark, tmp_path):
+        """PackFlag on the router stamps every written row with a pack id:
+        MD5(Topic) prefix, then the line's read context."""
+        import hashlib
+
+        cfg = self._router_cfg(tmp_path)
+        cfg["aggregators"] = [dict(cfg["aggregators"][0], PackFlag=True, Topic="app")]
+        out_dir = str(tmp_path / "sinks")
+        run_ilogtail_config(spark, cfg, out_dir=out_dir)
+        rows = spark.read.parquet(f"{out_dir}/routed").collect()
+        prefix = hashlib.md5(b"app").hexdigest()[:16].upper() + "-"
+        assert len(rows) == len(self.ROUTER_WANT)
+        assert all(r["lineage"].startswith(prefix) for r in rows)
+        by_code = {}
+        for r in rows:
+            by_code.setdefault(r["code"], set()).add(r["lineage"])
+        # one pack id per input line, shared by its copies
+        assert sorted(by_code) == ["1", "2", "3"]
+        assert all(len(v) == 1 for v in by_code.values())
+        assert len(set.union(*by_code.values())) == 3
+
+    def test_aggregator_with_flushers_raises(self, spark, tmp_path):
+        cfg = dict(self._router_cfg(tmp_path))
+        cfg["aggregators"] = cfg["aggregators"] + [{"Type": "aggregator_context"}]
+        with pytest.raises(ValueError, match="aggregator_context"):
+            run_ilogtail_config(spark, cfg, out_dir=str(tmp_path / "s"))
 
     def test_no_flushers_raises_batch(self, spark, tmp_path):
         df = spark.createDataFrame([("x",)], "content string")

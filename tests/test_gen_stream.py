@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ilogtail_spark.gen import HOT_EVERY, gen_transcripts
 from ilogtail_spark.plans.pipeline import FLAGSHIP_SPEC, build_pipeline
-from ilogtail_spark.streaming.stream import run_stream_pipeline
+from ilogtail_spark.streaming.stream import run_stream_pipeline, stream_transcripts
 
 STREAM_DIR = "/tmp/ilogtail_spark_stream_in"
 STREAM_OUT = "/tmp/ilogtail_spark_stream_out"
@@ -52,10 +52,7 @@ class TestStreaming:
     def test_windowed_watermark_counts(self, spark):
         import shutil as _sh
 
-        from ilogtail_spark.streaming.stream import (
-            stream_transcripts,
-            windowed_route_counts,
-        )
+        from ilogtail_spark.streaming.stream import windowed_route_counts
 
         in_dir = "/tmp/ilogtail_spark_wm_in"
         ck = "/tmp/ilogtail_spark_wm_ck"
@@ -102,7 +99,7 @@ class TestStreaming:
         )
         max_partition_bytes(total // (3 * spark.sparkContext.defaultParallelism))
 
-        run_stream_pipeline(spark, STREAM_DIR, STREAM_OUT, FLAGSHIP_SPEC)
+        run_stream_pipeline(spark, stream_transcripts(spark, STREAM_DIR), FLAGSHIP_SPEC, STREAM_OUT)
 
         routed = spark.read.parquet(f"{STREAM_OUT}/routed")
         assert routed.select("batch_id").distinct().count() >= 2
@@ -128,11 +125,11 @@ class TestStreaming:
         first, second = t.filter("turn_idx % 2 = 0"), t.filter("turn_idx % 2 = 1")
         first.coalesce(2).write.parquet(in_dir)
 
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
+        run_stream_pipeline(spark, stream_transcripts(spark, in_dir), FLAGSHIP_SPEC, out_dir)
         n1 = spark.read.parquet(f"{out_dir}/routed").count()
 
         second.coalesce(2).write.mode("append").parquet(in_dir)  # new files arrive
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
+        run_stream_pipeline(spark, stream_transcripts(spark, in_dir), FLAGSHIP_SPEC, out_dir)
         n2 = spark.read.parquet(f"{out_dir}/routed").count()
 
         total = build_pipeline(spark.read.parquet(in_dir), FLAGSHIP_SPEC).count()
@@ -150,17 +147,17 @@ class TestStreaming:
         t = gen_transcripts(spark, 30)
         t.repartition(4).write.parquet(in_dir)
 
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
+        run_stream_pipeline(spark, stream_transcripts(spark, in_dir), FLAGSHIP_SPEC, out_dir)
         n1 = spark.read.parquet(f"{out_dir}/routed").count()
         # simulate a replay after checkpoint loss — the worst case for an
         # append sink (every batch re-delivered)
         shutil.rmtree(f"{out_dir}/_stream_ckpt")
-        run_stream_pipeline(spark, in_dir, out_dir, FLAGSHIP_SPEC)
+        run_stream_pipeline(spark, stream_transcripts(spark, in_dir), FLAGSHIP_SPEC, out_dir)
         n2 = spark.read.parquet(f"{out_dir}/routed").count()
         assert n1 == n2 > 0
 
     def test_drain_past_timeout_raises(self, spark, tmp_path):
         gen_transcripts(spark, 10).write.parquet(str(tmp_path / "in"))
         with pytest.raises(TimeoutError):
-            run_stream_pipeline(spark, str(tmp_path / "in"), str(tmp_path / "out"),
-                                FLAGSHIP_SPEC, timeout_sec=0.001)
+            run_stream_pipeline(spark, stream_transcripts(spark, str(tmp_path / "in")),
+                                FLAGSHIP_SPEC, str(tmp_path / "out"), timeout_sec=0.001)

@@ -110,3 +110,41 @@ class TestSqlQueryInput:
 
         with pytest.raises(ValueError, match="StateMent"):
             read_inputs(spark, {"inputs": [{"Type": "service_pgsql"}]})
+
+    def test_committed_rerun_reads_nothing(self, spark, tmp_path):  # noqa: F811
+        """A YAML run re-submitted under a committed run_id returns the
+        committed counts without reading its inputs: routed/ stays
+        byte-identical and the SQL checkpoint does not move, although new
+        rows are waiting."""
+        from pathlib import Path
+
+        from ilogtail_spark.plans.config import run_ilogtail_config
+
+        def snapshot(d):
+            return {p.relative_to(d): p.read_bytes() for p in Path(d).rglob("*") if p.is_file()}
+
+        src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+        _write_rows(spark, src, range(1, 6))
+        cfg = {
+            "inputs": [{
+                "Type": "service_mysql",
+                "StateMent": "SELECT id, payload FROM src WHERE id > ? ORDER BY id",
+                "CheckPoint": True, "CheckPointColumn": "id",
+                "CheckPointColumnType": "int", "CheckPointStart": "0",
+                "Tables": {"src": src}, "CheckPointPath": ckpt,
+            }],
+            "flushers": [{"Type": "flusher_sls"}],
+        }
+        out_dir = str(tmp_path / "out")
+        first = run_ilogtail_config(spark, cfg, out_dir=out_dir, run_id="r1")
+        assert first == {"flusher_0_flusher_sls": 5}
+        routed, ckpt_files = snapshot(f"{out_dir}/routed"), snapshot(ckpt)
+
+        _write_rows(spark, src, range(6, 9))
+        assert run_ilogtail_config(spark, cfg, out_dir=out_dir, run_id="r1") == first
+        assert snapshot(f"{out_dir}/routed") == routed
+        assert snapshot(ckpt) == ckpt_files
+        # a new run_id does read them: the checkpoint can move
+        assert run_ilogtail_config(spark, cfg, out_dir=out_dir, run_id="r2") == {
+            "flusher_0_flusher_sls": 3}
+        assert snapshot(ckpt) != ckpt_files
