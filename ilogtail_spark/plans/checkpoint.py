@@ -1,4 +1,4 @@
-"""Checkpoint table — idempotent resume + lineage/metrics bookkeeping.
+"""Checkpoint commit log — idempotent resume + lineage/metrics bookkeeping.
 
 Reimplements the *semantics* of the reference's checkpoint layers:
   * Go: leveldb checkpoint manager (pluginmanager/checkpoint_manager.go:40-52)
@@ -8,31 +8,32 @@ Reimplements the *semantics* of the reference's checkpoint layers:
     and AdhocJobCheckpoint for one-shot imports
     (core/checkpoint/AdhocJobCheckpoint.cpp).
 
-Spark-first shape: a tiny append-only parquet table of commit records
-(run_id, stage, payload, commit marker). A stage re-run first consults
-the table; already-committed stages are skipped, so the whole pipeline is
-resumable from the last committed write — the sandbox stand-in for an
-Iceberg snapshot id per commit (on a real cluster this table IS an
-Iceberg table and `payload` carries the snapshot id).
+Shape: the commit protocol of Structured Streaming's offset and commit
+logs. Each commit is one file `<path>/<seq:020d>.json` holding
+`{"run_id", "stage", "payload"}`, created by the driver through Spark's
+`CheckpointFileManager.createAtomic` (a hidden temp file renamed into
+place without overwriting), so two writers of one sequence number cannot
+both commit: the second raises. The sequence number is the file name; a
+read lists the directory and takes the newest matching entry. A stage
+re-run first consults the log; already-committed stages are skipped, so
+the whole pipeline is resumable from the last committed write.
 
-The table is driver-written (a few rows per run), never on the data path.
+Committing and reading start no Spark job. Tables written before the log
+(append-only parquet rows) still resume: when no log entry matches and
+the directory holds parquet part files, those are read, never written.
 """
 
 from __future__ import annotations
 
 import json
-import time
+import re
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from ilogtail_spark.exprutil import literal_frame
-
-# commit_seq: parquet collect order follows FILE LISTING, not append
-# time — with one parquet file per commit, "the last row" is otherwise
-# arbitrary. Every commit stamps a monotonic sequence and `payload`
-# returns the record with the highest one (re-commits with updated
-# payloads — index compaction generations — depend on this). Tables
-# written before the column existed read as NULL and sort oldest.
+_ENTRY = re.compile(r"\d{20}\.json")
+# the parquet commit rows written before the log; commit_seq orders a
+# run's re-commits and reads NULL (oldest) in tables that predate it
 _SCHEMA = "run_id string, stage string, payload string, committed boolean, commit_seq long"
 
 
@@ -41,29 +42,61 @@ class CheckpointTable:
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame | None:
-        """The table, or None when nothing was ever committed to it. The
-        existence test asks the Hadoop FileSystem (no Spark job), and every
-        other failure — a bad scheme, an unreadable table — raises: read
-        as "never committed", it would let a run overwrite committed sinks."""
-        sc = self.spark.sparkContext
-        path = sc._jvm.org.apache.hadoop.fs.Path(self.path)
-        if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+    @cached_property
+    def _root(self):
+        return self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+
+    @cached_property
+    def _fm(self):
+        jvm = self.spark._jvm
+        return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+            self._root, self.spark._jsc.hadoopConfiguration())
+
+    def _file(self, name: str):
+        return self.spark._jvm.org.apache.hadoop.fs.Path(self._root, name)
+
+    def _names(self) -> list[str] | None:
+        """File names in the directory, or None when nothing was ever
+        committed to it. Every other failure — a bad scheme, an unreadable
+        directory — raises: read as "never committed", it would let a run
+        overwrite committed sinks."""
+        if not self._fm.exists(self._root):
             return None
-        return self.spark.read.schema(_SCHEMA).parquet(self.path)
+        return [s.getPath().getName() for s in self._fm.list(self._root)]
 
     def is_committed(self, run_id: str, stage: str) -> bool:
         return self.payload(run_id, stage) is not None
 
     def commit(self, run_id: str, stage: str, payload: dict | None = None) -> None:
-        row = (run_id, stage, json.dumps(payload or {}, sort_keys=True), True, time.time_ns())
-        literal_frame(self.spark, [row], _SCHEMA).write.mode("append").parquet(self.path)
+        names = self._names()
+        if names is None:
+            self._fm.mkdirs(self._root)
+        seq = max((int(n[:20]) for n in names or () if _ENTRY.fullmatch(n)), default=-1) + 1
+        entry = {"run_id": run_id, "stage": stage, "payload": payload or {}}
+        out = self._fm.createAtomic(self._file(f"{seq:020d}.json"), False)
+        try:
+            out.write(bytearray(json.dumps(entry, sort_keys=True).encode()))
+        except BaseException:
+            out.cancel()
+            raise
+        out.close()
 
     def payload(self, run_id: str, stage: str) -> dict | None:
-        df = self._read()
-        if df is None:
+        names = self._names()
+        if names is None:
             return None
+        io = self.spark._jvm.org.apache.commons.io.IOUtils
+        for name in sorted(filter(_ENTRY.fullmatch, names), reverse=True):
+            stream = self._fm.open(self._file(name))
+            try:
+                entry = json.loads(io.toString(stream, "UTF-8"))
+            finally:
+                stream.close()
+            if entry["run_id"] == run_id and entry["stage"] == stage:
+                return entry["payload"]
+        if not any(n.endswith(".parquet") for n in names):
+            return None
+        df = self.spark.read.schema(_SCHEMA).parquet(f"{self.path}/*.parquet")
         mine = df.filter((df.run_id == run_id) & (df.stage == stage) & df.committed)
         rows = mine.select("commit_seq", "payload").collect()
-        # a run's few commits are ordered here: a Spark sort costs two jobs
         return json.loads(max(rows, key=lambda r: r[0] or -1)[1]) if rows else None

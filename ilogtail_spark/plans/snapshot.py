@@ -25,7 +25,8 @@ The artifacts and their on-disk shapes:
     rows of (word, bits) parquet plus its (n, n_bits, n_hashes) build
     parameters; `bloom_contamination(bitmap=...)` probes the reload.
 
-Every write ends with a `CheckpointTable` commit marker carrying the
+Every write ends with a `CheckpointTable` commit — one driver-written
+JSON entry in the `_commits` log, no Spark job — carrying the
 artifact's location/parameters; loaders REFUSE uncommitted state (a
 torn write is invisible, exactly-once semantics per stage). Loaders
 also re-register the bucketed tables in the session catalog from the
@@ -54,7 +55,7 @@ class CorpusSnapshot:
 
     All table names are derived from the path (catalog-unique), all
     data lives under ``path`` (external tables — dropping the catalog
-    entry never deletes data), and the `_commits` checkpoint table is
+    entry never deletes data), and the `_commits` commit log is
     the source of truth for what exists.
     """
 

@@ -14,7 +14,7 @@ Local sandbox equivalent:
     python -m ilogtail_spark.plans.submit --input /tmp/...parquet --out /tmp/out
 
 The job is idempotent per --run-id: a re-submit after failure skips
-stages already committed in the checkpoint table (plans/checkpoint.py),
+stages already committed in the checkpoint log (plans/checkpoint.py),
 which is the cluster-restart story the reference implements with
 FlushOutStore + leveldb checkpoints (pluginmanager/flusher_out_store.go,
 checkpoint_manager.go:40-52).

@@ -9,9 +9,9 @@ snapshot-range incremental reads replace file-offset checkpoints
 
 This sandbox ships no iceberg-spark-runtime jar and has no network, so
 every call degrades to the parquet equivalent with the SAME call shape:
-  * append commit        → atomic directory write + checkpoint-table row
+  * append commit        → atomic directory write + commit-log entry
   * snapshot-range read  → full read (offsets tracked by the checkpoint
-    table at the pipeline level instead)
+    log at the pipeline level instead)
 The pipeline code paths are identical either way — swap `ICEBERG_OK`
 by adding the runtime jar + catalog conf in `session.py`.
 """

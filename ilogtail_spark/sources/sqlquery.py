@@ -12,6 +12,8 @@ parquet/Iceberg table paths registered as views, with the statement
 executed by Spark SQL (predicate pushdown bounds the scan to the new
 rows, the exact property the reference gets from the DB index).
 
+The saved value is one entry of a commit log at `ckpt_path`
+(plans/checkpoint.py): a JSON file the driver writes, no Spark job.
 Checkpoint timing matches the reference: SaveCheckPoint fires after the
 rows are handed to the collector, BEFORE delivery is confirmed
 (mysql.go:341-351) — at-most-once per batch under a crash between save

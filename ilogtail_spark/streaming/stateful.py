@@ -351,7 +351,7 @@ def curation_ingest_sink(
     `foreachBatch` sink that, per micro-batch,
 
       1. loads the dedup index from the `CorpusSnapshot` at
-         ``snapshot_path`` (bucketed parquet + commit marker — survives
+         ``snapshot_path`` (bucketed parquet + commit-log entry — survives
          any restart, unlike the localCheckpointed static-index twin in
          tests/test_streaming_stateful.py);
       2. probes the batch (`incremental_dedup`) with the snapshot's own

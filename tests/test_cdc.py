@@ -278,3 +278,66 @@ class TestCdcStateTable:
         assert any(d.startswith("gen_1") for d in os.listdir(path))
         got = {r["pk"]: r["val"] for r in st.current().collect()}
         assert got == {1: "v5", 2: "KEEP"}
+
+    def test_fault_between_generation_write_and_commit(
+        self, spark, tmp_path, monkeypatch  # noqa: F811
+    ):
+        """A manifest commit that fails after its generation was written
+        leaves the batch unapplied; re-applying the same batch_id through a
+        fresh handle folds it in once, with the rows of a clean run."""
+        import json
+        import os
+
+        import pytest
+
+        from ilogtail_spark.operators.cdc import CdcStateTable
+        from ilogtail_spark.plans.checkpoint import CheckpointTable
+
+        batches = [
+            spark.createDataFrame(
+                [(1, 10, "row_insert", "a"), (2, 11, "row_insert", "b")], SCHEMA
+            ),
+            spark.createDataFrame(
+                [(1, 20, "row_update", "a2"), (2, 21, "row_delete", "b"),
+                 (3, 22, "row_insert", "c")],
+                SCHEMA,
+            ),
+        ]
+
+        def handle(path):
+            return CdcStateTable(spark, path, ["pk"], payload_cols=["val"])
+
+        def rows(st):
+            return sorted(map(repr, st.current().collect()))
+
+        clean = handle(str(tmp_path / "clean"))
+        for i, b in enumerate(batches):
+            clean.apply_batch(b, i)
+
+        commit = CheckpointTable.commit
+        calls = []
+
+        def fail_once(self, *args, **kwargs):
+            calls.append(args)
+            if len(calls) == 1:
+                raise RuntimeError("injected fault before commit")
+            return commit(self, *args, **kwargs)
+
+        path = str(tmp_path / "faulted")
+        st = handle(path)
+        st.apply_batch(batches[0], 0)
+        monkeypatch.setattr(CheckpointTable, "commit", fail_once)
+        with pytest.raises(RuntimeError, match="injected"):
+            st.apply_batch(batches[1], 1)
+        # the fault struck after gen_2 was written; the state is batch 0's
+        assert os.path.isdir(f"{path}/gen_2")
+        assert {r["val"] for r in handle(path).current().collect()} == {"a", "b"}
+
+        handle(path).apply_batch(batches[1], 1)
+        assert rows(handle(path)) == rows(clean)
+        log = f"{path}/_commits"
+        entries = [
+            json.loads(open(os.path.join(log, n)).read())
+            for n in sorted(os.listdir(log)) if n.endswith(".json") and n[0] != "."
+        ]
+        assert [e["payload"]["batch_id"] for e in entries] == [0, 1]

@@ -133,6 +133,12 @@ def _rows(df) -> list:
     return sorted(map(repr, df.collect()))
 
 
+def _log(path: str) -> list[dict]:
+    """A commit log's entries, oldest first, read from its files."""
+    names = sorted(n for n in os.listdir(path) if re.fullmatch(r"\d{20}\.json", n))
+    return [json.loads(open(os.path.join(path, n)).read()) for n in names]
+
+
 def _job_ids(spark, fn) -> int:
     """How many Spark jobs `fn()` launches: the ids handed out in a job
     group of its own (the status store's total count is capped by
@@ -201,15 +207,28 @@ class TestSinkPath:
         shutil.rmtree(out, ignore_errors=True)
 
     def test_warm_flagship_job_budget(self, spark, transcripts):
-        """A fresh flagship run is 5 jobs: the routed write, the grouped
-        aggregate (shuffle map + result), sink_counts and the commit."""
+        """A fresh flagship run is 4 jobs: the routed write, the grouped
+        aggregate (shuffle map + result) and sink_counts. The commit is a
+        driver-written log entry, not a job."""
         for i in range(2):
             out = f"{OUT}_jobs_{i}"
             shutil.rmtree(out, ignore_errors=True)
             n = _job_ids(spark, lambda: run_pipeline(
                 spark, transcripts, FLAGSHIP_SPEC, out, run_id="j1"))
             shutil.rmtree(out, ignore_errors=True)
-        assert 0 < n <= 5
+        assert 0 < n <= 4
+
+    def test_committed_rerun_no_jobs(self, spark, transcripts):
+        """A committed run_id is answered from the commit log alone."""
+        out = f"{OUT}_rerun_jobs"
+        shutil.rmtree(out, ignore_errors=True)
+        counts = run_pipeline(spark, transcripts, FLAGSHIP_SPEC, out, run_id="j1")
+        again = {}
+        n = _job_ids(spark, lambda: again.update(run_pipeline(
+            spark, transcripts, FLAGSHIP_SPEC, out, run_id="j1")))
+        shutil.rmtree(out, ignore_errors=True)
+        assert again == counts
+        assert n == 0
 
     def test_fault_between_write_and_commit(self, spark, transcripts, monkeypatch):
         clean, faulted = f"{OUT}_clean", f"{OUT}_faulted"
@@ -237,17 +256,37 @@ class TestSinkPath:
         for table in ("routed", "sink_counts", "group_route_role_group"):
             assert _rows(spark.read.parquet(f"{faulted}/{table}")) == _rows(
                 spark.read.parquet(f"{clean}/{table}")), table
-        ck = spark.read.parquet(f"{faulted}/_checkpoint")
-        assert ck.filter((ck.run_id == "f1") & ck.committed).count() == 1
+        assert [e["run_id"] for e in _log(f"{faulted}/_checkpoint")] == ["f1"]
         for d in (clean, faulted):
             shutil.rmtree(d, ignore_errors=True)
 
 
 class TestCheckpointFormat:
-    def test_commit_row_dtypes(self, spark, tmp_path):
+    def test_commit_log_entries(self, spark, tmp_path, monkeypatch):
+        from py4j.protocol import Py4JJavaError
+
         ckpt = CheckpointTable(spark, str(tmp_path / "_checkpoint"))
         ckpt.commit("r1", "route_write", {"a": 1})
-        assert spark.read.parquet(ckpt.path).dtypes == spark.createDataFrame([], _SCHEMA).dtypes
+        ckpt.commit("r0", "route_write", {"a": 0})
+        # one <seq>.json entry per commit, in commit order
+        assert _log(ckpt.path) == [
+            {"run_id": "r1", "stage": "route_write", "payload": {"a": 1}},
+            {"run_id": "r0", "stage": "route_write", "payload": {"a": 0}},
+        ]
+        # a writer killed before its rename leaves a hidden temp file
+        (tmp_path / "_checkpoint" / f".{5:020d}.json.0123.tmp").write_text("{torn")
+        assert ckpt.payload("r1", "route_write") == {"a": 1}
+
+        # a second writer that listed the log before the first one
+        # committed picks the same sequence number and must not win
+        late = CheckpointTable(spark, ckpt.path)
+        stale = late._names()
+        ckpt.commit("r1", "route_write", {"a": 2})
+        monkeypatch.setattr(late, "_names", lambda: stale)
+        with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+            late.commit("r1", "route_write", {"a": 3})
+        assert ckpt.payload("r1", "route_write") == {"a": 2}
+        assert [e["payload"] for e in _log(ckpt.path)] == [{"a": 1}, {"a": 0}, {"a": 2}]
 
     def test_mixed_format_reads_back(self, spark, tmp_path):
         """Files written by createDataFrame (earlier commits, flat route →
