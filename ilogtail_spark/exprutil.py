@@ -21,14 +21,15 @@ from pyspark.sql.types import ArrayType, StructType
 def pin(col: Column) -> Column:
     """Pin an expensive derived expression to a single evaluation site.
 
-    Wraps the column in a plan-level NONDETERMINISTIC no-op (`shuffle`
-    of a one-element array): the optimizer then refuses to inline the
+    Wraps the column in a plan-level NONDETERMINISTIC no-op (element 1
+    of a one-element array, at an index computed from the nondeterministic
+    partition id): the optimizer then refuses to inline the
     defining expression into downstream operators or to duplicate it
     under pushed-down filters, so it is evaluated once per row in one
     Project — the pure-expression analog of `udf.asNondeterministic()`
-    (optimization guide §4.4). Semantically a no-op: shuffling a
-    single-element array has exactly one possible outcome, so the value
-    is deterministic even under task retries.
+    (optimization guide §4.4). Semantically a no-op: the index is 1 in
+    every partition, so the value is deterministic even under task
+    retries.
 
     Trade-off (same as §4.4): a pinned column also blocks legitimate
     filter pushdown THROUGH itself, so pin only expressions whose
@@ -45,13 +46,14 @@ def pin(col: Column) -> Column:
         F.col) — embedding the pinned tree into every consumer copies a
         nondeterministic tree per site, which also defeats runtime
         subexpression elimination.
-    `element_at(array(col), int(rand(0)*0)+1)` survives optimization,
-    codegens, and always evaluates to `col` (index is always 1). The seed
-    is fixed because it is a literal in the generated Java: an unseeded
-    `rand()` draws a new one per call, so every rebuilt plan would miss
-    the codegen cache and compile again.
+    `element_at(array(col), spark_partition_id()*0+1)` survives
+    optimization, codegens, and always evaluates to `col` (index is
+    always 1). It carries no seed: a seed is a literal in the generated
+    Java, and a stream re-seeds every `rand` of each micro-batch
+    (IncrementalExecution), so `rand(0)` compiled the stage anew per
+    batch, as an unseeded `rand()` does per rebuilt plan.
     """
-    return F.element_at(F.array(col), (F.rand(0) * 0).cast("int") + 1)
+    return F.element_at(F.array(col), F.spark_partition_id() * 0 + 1)
 
 
 def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:

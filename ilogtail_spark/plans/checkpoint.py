@@ -10,11 +10,12 @@ Reimplements the *semantics* of the reference's checkpoint layers:
 
 Shape: the commit protocol of Structured Streaming's offset and commit
 logs. Each commit is one file `<path>/<seq:020d>.json` holding
-`{"run_id", "stage", "payload"}`, created by the driver through Spark's
-`CheckpointFileManager.createAtomic` (a hidden temp file renamed into
-place without overwriting), so two writers of one sequence number cannot
-both commit: the second raises. The sequence number is the file name; a
-read lists the directory and takes the newest matching entry. A stage
+`{"run_id", "stage", "payload"}`, created by the driver the way Spark's
+`CheckpointFileManager.createAtomic` creates one (a hidden temp file
+renamed into place without overwriting), so two writers of one sequence
+number cannot both commit: the second raises and removes its temp file.
+The sequence number is the file name; a read lists the directory and
+takes the newest matching entry. A stage
 re-run first consults the log; already-committed stages are skipped, so
 the whole pipeline is resumable from the last committed write.
 
@@ -27,6 +28,7 @@ from __future__ import annotations
 
 import json
 import re
+import uuid
 from functools import cached_property
 
 from pyspark.sql import SparkSession
@@ -73,13 +75,19 @@ class CheckpointTable:
             self._fm.mkdirs(self._root)
         seq = max((int(n[:20]) for n in names or () if _ENTRY.fullmatch(n)), default=-1) + 1
         entry = {"run_id": run_id, "stage": stage, "payload": payload or {}}
-        out = self._fm.createAtomic(self._file(f"{seq:020d}.json"), False)
+        # createAtomic's protocol with a temp name of our own: its stream
+        # keeps the temp file (and its .crc) when the rename loses the race
+        tmp = self._file(f".{seq:020d}.json.{uuid.uuid4()}.tmp")
+        out = self._fm.createTempFile(tmp)
         try:
-            out.write(bytearray(json.dumps(entry, sort_keys=True).encode()))
+            try:
+                out.write(bytearray(json.dumps(entry, sort_keys=True).encode()))
+            finally:
+                out.close()
+            self._fm.renameTempFile(tmp, self._file(f"{seq:020d}.json"), False)
         except BaseException:
-            out.cancel()
+            self._fm.delete(tmp)
             raise
-        out.close()
 
     def payload(self, run_id: str, stage: str) -> dict | None:
         names = self._names()

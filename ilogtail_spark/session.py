@@ -43,6 +43,22 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # List files on the driver. Past this many paths (default 32),
+        # InMemoryFileIndex lists them in a Spark job of one task per path.
+        # A stream micro-batch hands it the files its source already
+        # listed, so a batch of more than 32 new files paid a second job
+        # just to stat them again. Each of those paths is a file, so a
+        # listing task is one getFileStatus, which the driver does faster
+        # than a job can be scheduled. The scale path is untouched: Iceberg
+        # scans plan from manifests, not from InMemoryFileIndex.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
+        # Generated classes kept per JVM (static; the default is 100). One
+        # registry_mix pass (14 queries) needs 307: 291 on the cold pass
+        # plus 16 AQE plan variants seen on the next, measured on 4 cores.
+        # With 100, LRU eviction recompiled about 310 classes on every warm
+        # pass; 1000 holds a pass together with the flagship's and the
+        # stream runner's classes (under 100 each).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

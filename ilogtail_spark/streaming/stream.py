@@ -111,7 +111,9 @@ def drain(
     core/plugin/input/InputStaticFile.cpp), with offsets checkpointed at
     `out_dir/_stream_ckpt` so a rerun picks up only new input.
     `foreachBatch` is the reference's FlusherV1.Flush extension point
-    (pkg/pipeline/flusher.go:60-66). A drain still running after
+    (pkg/pipeline/flusher.go:60-66). A micro-batch runs only the jobs
+    `sink` runs: the source's file list is not listed again in a job of
+    its own (session.py lists serially). A drain still running after
     `timeout_sec` is stopped and raises TimeoutError."""
     q = (
         df.writeStream.foreachBatch(sink)
@@ -138,7 +140,8 @@ def run_stream_pipeline(
     applied to the streaming DataFrame `stream` (e.g.
     :func:`stream_transcripts`), then :func:`drain`, each micro-batch
     written by `write_routed` under
-    `out_dir/routed/batch_id=<n>/route=<route>/`. Returns once the input
+    `out_dir/routed/batch_id=<n>/route=<route>/` in one Spark job, the
+    write. Returns once the input
     available at start is drained; a rerun drains only input that arrived
     since. Raises TimeoutError after `timeout_sec`."""
     from ilogtail_spark.operators.route import write_routed

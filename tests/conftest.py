@@ -15,6 +15,26 @@ from ilogtail_spark.session import get_spark  # noqa: E402
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def spark_jobs(spark, fn) -> int:
+    """How many Spark jobs `fn()` launches: the job ids the scheduler
+    hands out during the call. Ids are sequential, so this also counts the
+    jobs a streaming query runs on its own thread and job group, and it
+    does not depend on how many jobs the status store still retains."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first = scheduler.nextJobId()
+    fn()
+    return scheduler.nextJobId() - first
+
+
+def compiled_classes(spark, fn) -> int:
+    """How many classes Spark's code generator compiles during `fn()`; a
+    plan built again from the same calls should hit the codegen cache."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    fn()
+    return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

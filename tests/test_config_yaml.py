@@ -9,6 +9,7 @@ import os
 import shutil
 
 import pytest
+from conftest import compiled_classes, spark_jobs
 
 from ilogtail_spark.plans.config import (
     compile_ilogtail_config,
@@ -655,6 +656,38 @@ class TestStreamingConfig:
         assert len(batches) >= 2
         assert replay(waves) == batches
 
+    def _backlog(self, watch, n_files):
+        watch.mkdir()
+        for f in range(n_files):
+            (watch / f"{f:02d}.log").write_text(f"ERROR {f}\nINFO {f}\n")
+        return dict(self.CFG, inputs=[{"Type": "input_file", "FilePaths": [str(watch)]}])
+
+    def test_micro_batch_is_one_job(self, spark, tmp_path):
+        """A micro-batch over more new files than Spark's parallel-listing
+        threshold (32) runs one job, the routed write: the files its
+        source listed are not listed again in a job of their own."""
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        cfg = self._backlog(tmp_path / "logs", 48)
+        out_dir = str(tmp_path / "sinks")
+        assert spark_jobs(spark, lambda: run_ilogtail_config_stream(
+            spark, cfg, out_dir=out_dir, timeout_sec=90)) == 1
+        assert self._routed_counts(spark, out_dir) == {
+            ("flusher_0_flusher_sls", 0): 48, ("flusher_1_flusher_file", 0): 96}
+
+    def test_rebuilt_stream_compiles_nothing(self, spark, tmp_path):
+        """A second drain of the same config builds the same plans, so
+        every generated class comes from the codegen cache."""
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        cfg = self._backlog(tmp_path / "logs", 4)
+
+        def drain(out):
+            run_ilogtail_config_stream(spark, cfg, out_dir=str(tmp_path / out), timeout_sec=90)
+
+        drain("first")
+        assert compiled_classes(spark, lambda: drain("second")) == 0
+
     def test_multiline_raises_on_stream(self, spark, tmp_path):
         from ilogtail_spark.plans.config import run_ilogtail_config_stream
 
@@ -900,8 +933,6 @@ class TestOneSinkLayout:
         """The fan-out is one write: exactly one job writes routed/, a
         run with three flushers without Match starts as many jobs as a
         run with one, and every input row lands once under each flusher."""
-        from test_pipeline_e2e import _job_ids
-
         from ilogtail_spark.operators import route
 
         df = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], "content string")
@@ -909,12 +940,12 @@ class TestOneSinkLayout:
 
         def run(n_flushers, out_dir):
             cfg = {"processors": [], "flushers": [{"Type": t} for t in types[:n_flushers]]}
-            return _job_ids(spark, lambda: run_ilogtail_config(spark, cfg, df=df, out_dir=out_dir))
+            return spark_jobs(spark, lambda: run_ilogtail_config(spark, cfg, df=df, out_dir=out_dir))
 
         assert run(3, str(tmp_path / "three")) == run(1, str(tmp_path / "one"))
         write, writes = route.write_routed, []
         monkeypatch.setattr(route, "write_routed", lambda *a, **kw: writes.append(
-            _job_ids(spark, lambda: write(*a, **kw))))
+            spark_jobs(spark, lambda: write(*a, **kw))))
         out_dir = str(tmp_path / "sinks")
         run(3, out_dir)
         assert writes == [1]

@@ -5,6 +5,7 @@ processor_json_test.go): literal rows in, exact fields out."""
 from __future__ import annotations
 
 import pytest
+from conftest import compiled_classes
 from pyspark.sql import functions as F
 
 from ilogtail_spark.operators.parse import (
@@ -118,9 +119,8 @@ class TestRegexParse:
 
     def test_rebuilt_plan_compiles_nothing(self, spark):
         # a plan built again from the same calls must hit Spark's codegen
-        # cache: a per-build literal in the generated Java (pin's rand
-        # seed) would compile every run anew
-        codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        # cache: a per-build literal in the generated Java (a rand seed)
+        # would compile every run anew
         df = spark.range(16).select(
             F.concat(F.lit("2021-08-27 13:04:14.920 "), F.col("id").cast("string"),
                      F.lit(" [T] INFO  msg")).alias("text")
@@ -130,9 +130,7 @@ class TestRegexParse:
             return regex_parse(df, APSARA_RE, APSARA_KEYS).collect()
 
         assert all(r["pid"] is not None for r in run())
-        before = codegen.METRIC_COMPILATION_TIME().getCount()
-        run()
-        assert codegen.METRIC_COMPILATION_TIME().getCount() == before
+        assert compiled_classes(spark, run) == 0
 
 
 class TestRequiredLiterals:

@@ -8,10 +8,10 @@ import json
 import os
 import re
 import shutil
-import uuid
 
 import pandas as pd
 import pytest
+from conftest import compiled_classes, spark_jobs
 from pyspark.sql import functions as F
 
 from ilogtail_spark.operators.timeparse import gotime_op, strptime_op, strptime_to_java
@@ -139,21 +139,6 @@ def _log(path: str) -> list[dict]:
     return [json.loads(open(os.path.join(path, n)).read()) for n in names]
 
 
-def _job_ids(spark, fn) -> int:
-    """How many Spark jobs `fn()` launches: the ids handed out in a job
-    group of its own (the status store's total count is capped by
-    spark.ui.retainedJobs, which a long test session exceeds)."""
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 _ROUTER_SHAPES = {
     # sink_never matches no row and must be absent, not 0
     "exclusive_empty_route": ({"router": {"rules": [
@@ -213,7 +198,7 @@ class TestSinkPath:
         for i in range(2):
             out = f"{OUT}_jobs_{i}"
             shutil.rmtree(out, ignore_errors=True)
-            n = _job_ids(spark, lambda: run_pipeline(
+            n = spark_jobs(spark, lambda: run_pipeline(
                 spark, transcripts, FLAGSHIP_SPEC, out, run_id="j1"))
             shutil.rmtree(out, ignore_errors=True)
         assert 0 < n <= 4
@@ -224,10 +209,35 @@ class TestSinkPath:
         shutil.rmtree(out, ignore_errors=True)
         counts = run_pipeline(spark, transcripts, FLAGSHIP_SPEC, out, run_id="j1")
         again = {}
-        n = _job_ids(spark, lambda: again.update(run_pipeline(
+        n = spark_jobs(spark, lambda: again.update(run_pipeline(
             spark, transcripts, FLAGSHIP_SPEC, out, run_id="j1")))
         shutil.rmtree(out, ignore_errors=True)
         assert again == counts
+        assert n == 0
+
+    def test_read_of_many_partitions_returns_every_row(self, spark, tmp_path):
+        """A sink with more route directories than Spark's parallel-listing
+        threshold (32) is listed on the driver and reads back whole."""
+        from ilogtail_spark.operators.route import write_routed
+
+        df = spark.range(4000).select(
+            "id", F.concat(F.lit("r"), (F.col("id") % 40).cast("string")).alias("route"))
+        write_routed(df, str(tmp_path / "routed"))
+        assert sum(n.startswith("route=") for n in os.listdir(tmp_path / "routed")) == 40
+        back = spark.read.parquet(str(tmp_path / "routed"))
+        assert _rows(back.select("id", "route")) == _rows(df)
+
+    def test_rebuilt_flagship_compiles_nothing(self, spark, transcripts):
+        """A second fresh run builds the same plans, so every generated
+        class comes from the codegen cache."""
+        outs = [f"{OUT}_codegen_{i}" for i in range(2)]
+        for out in outs:
+            shutil.rmtree(out, ignore_errors=True)
+        run_pipeline(spark, transcripts, FLAGSHIP_SPEC, outs[0], run_id="c1")
+        n = compiled_classes(spark, lambda: run_pipeline(
+            spark, transcripts, FLAGSHIP_SPEC, outs[1], run_id="c1"))
+        for out in outs:
+            shutil.rmtree(out, ignore_errors=True)
         assert n == 0
 
     def test_fault_between_write_and_commit(self, spark, transcripts, monkeypatch):
@@ -287,6 +297,20 @@ class TestCheckpointFormat:
             late.commit("r1", "route_write", {"a": 3})
         assert ckpt.payload("r1", "route_write") == {"a": 2}
         assert [e["payload"] for e in _log(ckpt.path)] == [{"a": 1}, {"a": 0}, {"a": 2}]
+
+    def test_lost_race_leaves_no_temp_file(self, spark, tmp_path, monkeypatch):
+        from py4j.protocol import Py4JJavaError
+
+        ckpt = CheckpointTable(spark, str(tmp_path / "_checkpoint"))
+        ckpt.commit("r1", "route_write", {"a": 1})
+        late = CheckpointTable(spark, ckpt.path)
+        monkeypatch.setattr(late, "_names", lambda: [])
+        with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+            late.commit("r1", "route_write", {"a": 2})
+        entry = f"{0:020d}.json"
+        # the loser's hidden temp file and its checksum are gone
+        assert sorted(os.listdir(ckpt.path)) == sorted([entry, f".{entry}.crc"])
+        assert _log(ckpt.path) == [{"run_id": "r1", "stage": "route_write", "payload": {"a": 1}}]
 
     def test_mixed_format_reads_back(self, spark, tmp_path):
         """Files written by createDataFrame (earlier commits, flat route →
