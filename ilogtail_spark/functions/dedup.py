@@ -199,10 +199,19 @@ def ngram_jaccard_pairs(
     packable = span is not None and span * span < 2**63
     pre_cols: list[Column]
     if packable:
-        mn = int(bounds["mn"])
-        key = (
-            (F.col("a.id") - F.lit(mn)) * F.lit(span)
-            + (F.col("b.id") - F.lit(mn))
+        mn, mx = int(bounds["mn"]), int(bounds["mx"])
+        # the bounds come from one evaluation of `df` and the pairs from
+        # another: an id outside [mn, mx] (a nondeterministic input) would
+        # pack into another pair's key, so it fails instead. a.id < b.id,
+        # so checking a.id against mn and b.id against mx covers both.
+        key = F.when(
+            (F.col("a.id") < F.lit(mn)) | (F.col("b.id") > F.lit(mx)),
+            F.raise_error(F.lit(
+                f"ngram_jaccard_pairs: an id left the bounds [{mn}, {mx}] "
+                "taken for the packed pair key; the input is nondeterministic"
+            )),
+        ).otherwise(
+            (F.col("a.id") - F.lit(mn)) * F.lit(span) + (F.col("b.id") - F.lit(mn))
         ).alias("pk")
         pre_cols = [key]
     else:

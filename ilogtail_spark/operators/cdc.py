@@ -252,8 +252,19 @@ class CdcStateTable:
             .partitionBy("__bucket__")
             .parquet(location)
         )
+        # `touched` and the write each evaluate `batch_df`; a
+        # nondeterministic batch can write a bucket whose committed rows
+        # were never read as `base`, and committing it would lose them
+        written = self._list_bucket_dirs(location)
+        stray = sorted(set(written) - touched, key=int)
+        if stray:
+            raise ValueError(
+                f"CDC batch {batch_id} wrote buckets {stray} that its first "
+                "evaluation did not touch: batch_df is nondeterministic; "
+                "make it deterministic or materialize it before apply_batch"
+            )
         new_map = {b: p for b, p in prev_map.items() if b not in touched}
-        new_map.update(self._list_bucket_dirs(location))
+        new_map.update(written)
         # manifest HISTORY: the bucket maps of the keep_generations−1
         # preceding manifests ride in the payload, so GC can honor the
         # caller's retention — a reader holding any of the last

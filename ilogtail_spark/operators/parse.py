@@ -392,14 +392,20 @@ def kv_parse(
     (plugins/processor/split/keyvalue/key_value_splitter.go:26-98) and the
     SPL `parse-kv` op (core/unittest/spl/SplUnittest.cpp:415).
 
-    ``str_to_map`` does the pair/sep split JVM-side. If `keys` is given,
-    each is also projected to its own column (the common downstream shape);
-    the full map stays available under `dest`.
+    ``str_to_map`` does the pair/sep split JVM-side. Without `keys` the
+    map is the output, under `dest`. With `keys`, each is projected to its
+    own string column and the map is dropped, as the reference adds each
+    pair as a flat field of the event (key_value_splitter.go:98): a routed
+    row then holds every pair once, not again as a map that Parquet
+    encodes with per-entry repetition levels. The map is a named column
+    the key projections all reference, so Catalyst evaluates it once per
+    row rather than inlining it into each of them.
     """
-    df = df.withColumn(dest, F.str_to_map(F.col(source_key), F.lit(delimiter), F.lit(separator)))
-    if keys:
-        df = df.withColumns({k: F.col(dest).getItem(k) for k in keys})
-    return df
+    kv = F.str_to_map(F.col(source_key), F.lit(delimiter), F.lit(separator))
+    if not keys:
+        return df.withColumn(dest, kv)
+    df = df.withColumn("__kv__", kv)
+    return df.withColumns({k: F.col("__kv__").getItem(k) for k in keys}).drop("__kv__")
 
 
 def split_char(

@@ -22,7 +22,7 @@ Supported ops (the SplUnittest.cpp surface):
   parse-regexp <col>, '<pat>' as a, b → regex_parse
   parse-json <col>                    → json_parse (map mode + expand)
   parse-csv <col> as a, b, c          → csv_parse
-  parse-kv -delims='&=' <col>         → str_to_map + expand
+  parse-kv -delims='&=' <col> as a, b → kv_parse
   limit N                             → limit
   sort by k [asc|desc][, ...]         → orderBy
   stats agg(col) as k[, ...] by g     → groupBy().agg()
@@ -35,7 +35,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ilogtail_spark.operators.parse import csv_parse, regex_parse
+from ilogtail_spark.operators.parse import csv_parse, kv_parse, regex_parse
 
 # rows sampled to the driver for parse-json dynamic key discovery
 _JSON_KEY_SAMPLE_ROWS = 1024
@@ -193,14 +193,10 @@ def _apply_stage(df: DataFrame, stage: str) -> DataFrame:
             raise ValueError(f"bad parse-kv: {stage}")
         delims = _unquote(m.group(1) or "&=")
         pair_d, kv_d = (delims[0], delims[1]) if len(delims) >= 2 else (delims, "=")
-        col = m.group(2)
-        out = df.withColumn(
-            "__kv__", F.str_to_map(F.col(col), F.lit(pair_d), F.lit(kv_d))
-        )
-        if m.group(3):
-            keys = [k.strip() for k in m.group(3).split(",")]
-            out = out.withColumns({k: F.col("__kv__").getItem(k) for k in keys})
-        return out.drop("__kv__")
+        if not m.group(3):
+            return df  # no `as` keys: nothing is added
+        keys = [k.strip() for k in m.group(3).split(",")]
+        return kv_parse(df, m.group(2), delimiter=pair_d, separator=kv_d, keys=keys)
 
     if op == "limit":
         return df.limit(int(rest))

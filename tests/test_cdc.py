@@ -279,6 +279,32 @@ class TestCdcStateTable:
         got = {r["pk"]: r["val"] for r in st.current().collect()}
         assert got == {1: "v5", 2: "KEEP"}
 
+    def test_nondeterministic_batch_raises_before_commit(self, spark, tmp_path):
+        """apply_batch evaluates the batch once for the buckets it touches
+        and once for the write. A key that changes between the two (here:
+        current_timestamp(), which Spark fixes per query) writes buckets
+        whose committed rows were never merged in: it raises and commits
+        nothing."""
+        import pytest
+        from pyspark.sql import functions as F
+
+        from ilogtail_spark.operators.cdc import CdcStateTable
+
+        st = CdcStateTable(spark, str(tmp_path / "state"), ["pk"], payload_cols=["val"],
+                           n_buckets=256)
+        st.apply_batch(spark.createDataFrame([(1, 10, "row_insert", "a")], SCHEMA), 0)
+        meta = st._meta()
+        moving = spark.range(8).select(
+            (F.unix_micros(F.current_timestamp()) + F.col("id")).alias("pk"),
+            F.col("id").alias("_offset_"),
+            F.lit("row_insert").alias("_event_"),
+            F.lit("x").alias("val"),
+        )
+        with pytest.raises(ValueError, match="nondeterministic"):
+            st.apply_batch(moving, 1)
+        assert st._meta() == meta
+        assert {r["pk"]: r["val"] for r in st.current().collect()} == {1: "a"}
+
     def test_fault_between_generation_write_and_commit(
         self, spark, tmp_path, monkeypatch  # noqa: F811
     ):

@@ -1022,6 +1022,76 @@ class TestOneSinkLayout:
             run_ilogtail_config_stream(spark, cfg, out_dir=str(tmp_path / "o"))
 
 
+class TestKeyedKvSplit:
+    """processor_split_key_value with Keys, then processor_dict_map, then
+    three Match-routed flushers: each pair is written once, as a string
+    column, by the batch and the stream runner alike."""
+
+    KEYS = ["seq", "level", "svc", "code", "msg"]
+    LINES = [
+        "seq:0\tlevel:ERROR\tsvc:api\tcode:500\tmsg:boom",
+        "seq:1\tlevel:INFO\tsvc:db\tcode:200\tmsg:ok",
+        "seq:2\tlevel:WARN\tsvc:api\tcode:429\tmsg:slow\textra:x",
+        "seq:3\tsvc:api\tcode:200\tmsg:no level",
+        "seq:4\tlevel:ERROR\tcode:503\tmsg:no svc",
+    ]
+    FLUSHERS = [
+        {"Type": "flusher_sls", "Match": {"Type": "tag", "Key": "level", "Value": "ERROR"}},
+        {"Type": "flusher_kafka", "Match": {"Type": "tag", "Key": "svc", "Value": "api"}},
+        {"Type": "flusher_file"},
+    ]
+    WANT = sorted(
+        [("flusher_0_flusher_sls", s) for s in "04"]
+        + [("flusher_1_flusher_kafka", s) for s in "023"]
+        + [("flusher_2_flusher_file", s) for s in "01234"]
+    )
+
+    def _cfg(self, paths):
+        return {
+            "inputs": [{"Type": "input_file", "FilePaths": paths}],
+            "processors": [
+                {"Type": "processor_split_key_value", "SourceKey": "content",
+                 "Delimiter": "\t", "Separator": ":", "Keys": self.KEYS},
+                {"Type": "processor_dict_map", "SourceKey": "level", "DestKey": "severity",
+                 "MapDict": {"ERROR": "high", "WARN": "medium", "INFO": "low"},
+                 "HandleMissing": True, "Missing": "none"},
+            ],
+            "flushers": self.FLUSHERS,
+        }
+
+    def test_plan_splits_once(self, spark):
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame([(x,) for x in self.LINES], "content string")
+        routed = build_pipeline(df, compile_ilogtail_config(self._cfg([])))
+        plan = routed._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("str_to_map") == 1, plan
+        got = routed.filter(F.col("route") == "flusher_2_flusher_file")
+        assert {r["seq"]: r["severity"] for r in got.collect()} == {
+            "0": "high", "1": "low", "2": "medium", "3": "none", "4": "high"}
+
+    @pytest.mark.parametrize("mode", ["batch", "stream"])
+    def test_routed_rows_hold_each_pair_once(self, spark, tmp_path, mode):
+        from pyspark.sql import types as T
+
+        from ilogtail_spark.plans.config import run_ilogtail_config_stream
+
+        watch = tmp_path / "logs"
+        watch.mkdir()
+        (watch / "a.log").write_text("\n".join(self.LINES) + "\n")
+        cfg = self._cfg([str(watch)])
+        out_dir = str(tmp_path / "sinks")
+        if mode == "batch":
+            run_ilogtail_config(spark, cfg, out_dir=out_dir)
+        else:
+            run_ilogtail_config_stream(spark, cfg, out_dir=out_dir, timeout_sec=90)
+        routed = spark.read.parquet(f"{out_dir}/routed")
+        assert [f.name for f in routed.schema if isinstance(f.dataType, T.MapType)] == []
+        assert set(self.KEYS + ["severity", "content"]) <= set(routed.columns)
+        assert all(routed.schema[k].dataType == T.StringType() for k in self.KEYS)
+        assert sorted((r["route"], r["seq"]) for r in routed.collect()) == self.WANT
+
+
 class TestNetworkInputStream:
     def test_syslog_stream_decode(self, spark, tmp_path):
         """service_syslog frames tailed as a stream decode through the

@@ -75,6 +75,19 @@ class TestDedup:
         }
         assert packed == fallback and packed
 
+    def test_jaccard_packed_key_fails_on_moved_ids(self, spark, dup_docs):
+        """The packed pair key is built from id bounds taken in an eager
+        query. Ids that differ in the pair query (here: offset by
+        current_timestamp(), which Spark fixes per query) would pack into
+        other pairs' keys; they raise instead."""
+        from pyspark.sql import functions as F
+
+        moving = dup_docs.withColumn(
+            "doc_id", F.unix_micros(F.current_timestamp()) + F.col("doc_id"))
+        pairs = ngram_jaccard_pairs(moving, threshold=0.5)
+        with pytest.raises(Exception, match="left the bounds"):
+            pairs.collect()
+
     def test_minhash_exact_dup_estimates_one(self, dup_docs):
         sigs = {r["doc_id"]: r["minhash"] for r in minhash_signatures(dup_docs).collect()}
         assert sigs[1] == sigs[2]

@@ -7,7 +7,9 @@ from __future__ import annotations
 import pytest
 from conftest import compiled_classes
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ilogtail_spark.grok import grok_parse
 from ilogtail_spark.operators.parse import (
     anchor_extract,
     compile_dissect,
@@ -215,6 +217,24 @@ class TestKvSplit:
         out = kv_parse(df, keys=["class", "userid", "method", "message"]).first()
         assert out["userid"] == "123456" and out["message"] == "good"
 
+    def test_keyed_split_drops_its_map(self, spark):
+        # the pairs are the output: no map column, and an input column
+        # that happens to be called `kv` survives
+        df = _df(spark, [("a=1&b=2&kv=3", "mine")], "text string, kv string")
+        out = kv_parse(df, keys=["a", "b"])
+        assert out.columns == ["text", "kv", "a", "b"]
+        assert not any(isinstance(f.dataType, T.MapType) for f in out.schema)
+        assert tuple(out.first()) == ("a=1&b=2&kv=3", "mine", "1", "2")
+
+    def test_key_named_kv(self, spark):
+        out = kv_parse(_df(spark, [("a=1&kv=3",)]), keys=["kv"])
+        assert out.dtypes == [("text", "string"), ("kv", "string")]
+        assert out.first()["kv"] == "3"
+
+    def test_keyless_split_outputs_the_map(self, spark):
+        out = kv_parse(_df(spark, [("a=1&b=2",)]), dest="pairs").first()
+        assert out["pairs"] == {"a": "1", "b": "2"}
+
     def test_split_char_preserve_others(self, spark):
         df = _df(spark, [("a|b|c|d|e",)])
         out = split_char(df, ["k1", "k2"], sep="|", preserve_others=True).first()
@@ -307,3 +327,30 @@ class TestDissect:
         assert dissect_keys("%{a->} %{+b} %{+b/1} %{} %{?x} %{*k}:%{&k}") == [
             "a", "b", "k",
         ]
+
+
+# every keyed parse processor, on a line it parses into a="1", b="2"
+KEYED_PARSERS = {
+    "regex": ("a=1 b=2", lambda df: regex_parse(df, r"a=(\d+) b=(\d+)", ["a", "b"])),
+    "json": ('{"a": "1", "b": "2"}', lambda df: json_parse(df, schema="a string, b string")),
+    "csv": ("1,2", lambda df: csv_parse(df, ["a", "b"])),
+    "kv": ("a=1&b=2", lambda df: kv_parse(df, keys=["a", "b"])),
+    "split_char": ("1,2", lambda df: split_char(df, ["a", "b"])),
+    "dissect": ("1 2", lambda df: dissect_parse(df, "%{a} %{b}")),
+    "grok": ("1 2", lambda df: grok_parse(df, "%{NUMBER:a} %{NUMBER:b}")),
+    "grok_matches": ("1 2", lambda df: grok_parse(
+        df, ["%{WORD:a}-%{WORD:b}", "%{NUMBER:a} %{NUMBER:b}"])),
+}
+
+
+@pytest.mark.parametrize("name", list(KEYED_PARSERS))
+def test_keyed_parse_leaks_no_intermediate(spark, name):
+    """A parser given its keys outputs the key columns and the source:
+    no ``__*__`` intermediate and no map column reaches the routed rows."""
+    line, parse = KEYED_PARSERS[name]
+    out = parse(_df(spark, [(line,)]))
+    assert [c for c in out.columns if c.startswith("__") and c.endswith("__")] == []
+    assert [f.name for f in out.schema if isinstance(f.dataType, T.MapType)] == []
+    assert sorted(out.columns) == ["a", "b", "text"]
+    row = out.first()
+    assert (row["a"], row["b"]) == ("1", "2")
